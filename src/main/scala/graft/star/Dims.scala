@@ -117,22 +117,31 @@ object Dims {
     ("transmission_dim", "transmission_type", "transmission", "lower"),
     ("vehicle_make_dim", "make", "make", "none"))
 
+  /** A fused dim's delta is appended only when it has rows, or when the
+    * table does not exist yet (the empty append creates it with its schema).
+    * Skipping an empty append keeps the dim's read cache and high-water mark
+    * valid and adds no empty part file per load — the Parquet counterpart of
+    * an `ON CONFLICT DO NOTHING` upsert that finds nothing new. */
+  private def needsAppend(wh: Warehouse, table: String, counts: Map[String, Long]): Boolean =
+    counts.getOrElse(table, 0L) > 0 || !wh.exists(table)
+
   /** The seven single-key dim loads FUSED into one pass: one staging scan
     * produces every (dim, key) candidate (explode of a 7-struct array —
     * map-side, no extra shuffle width), one DISTINCT, one broadcast
     * anti-join against the tagged union of the existing dims, one
-    * dim-partitioned row_number for ids, then seven appends of the cached
-    * delta frame in a concurrent wave.
+    * dim-partitioned row_number for ids, then one concurrent wave of
+    * appends of the cached delta frame — one per dim that gained rows.
     *
     * Replaces seven independent DISTINCT+anti-join+zipWithIndex+append
     * chains (~2-3 driver actions and a full staging scan EACH): at
     * warehouse scale the staging scan dominates and runs ONCE here; in
-    * local/bench mode the action count drops ~14 → ~8 (the fused
-    * count/collect plus seven tiny cached writes). Ids are identical to the
-    * per-dim path: row_number over the same per-dim key order, offset by
-    * the same per-dim max — the window is partitioned by dim (never the
-    * single-partition no-partition form). Per-dim semantics unchanged from
-    * [[loadSimpleDim]]/[[insertOnlyNew]] (reference `update_dims.sql`:8-100).
+    * local/bench mode the action count drops ~14 → 1-8 (the fused
+    * count/collect plus one tiny cached write per changed dim). Ids are
+    * identical to the per-dim path: row_number over the same per-dim key
+    * order, offset by the same per-dim max — the window is partitioned by
+    * dim (never the single-partition no-partition form). Per-dim semantics
+    * unchanged from [[loadSimpleDim]]/[[insertOnlyNew]] (reference
+    * `update_dims.sql`:8-100).
     * Returns rows appended per table. */
   def loadSimpleDimsFused(wh: Warehouse, staging: DataFrame): Map[String, Long] = {
     import scala.concurrent.{Await, Future}
@@ -199,13 +208,15 @@ object Dims {
       // ONE action materializes the fused delta and yields per-dim counts
       val counts = assigned.groupBy(col("_dim")).count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      // seven appends of the now-cached tiny delta, concurrently
-      val wave = specs.map { case (table, _, keyName, _) => Future {
-        wh.append(table, assigned.filter(col("_dim") === table)
-          .select(col("id"), col("_key").as(keyName)))
-        // append invalidated the high-water mark; re-record the known value
-        wh.recordMaxId(table, offsets(table) + counts.getOrElse(table, 0L))
-      } }
+      // appends of the now-cached tiny delta, concurrently; empty deltas
+      // of existing dims are skipped (see needsAppend)
+      val wave = specs.filter { case (table, _, _, _) => needsAppend(wh, table, counts) }
+        .map { case (table, _, keyName, _) => Future {
+          wh.append(table, assigned.filter(col("_dim") === table)
+            .select(col("id"), col("_key").as(keyName)))
+          // append invalidated the high-water mark; re-record the known value
+          wh.recordMaxId(table, offsets(table) + counts.getOrElse(table, 0L))
+        } }
       Await.result(Future.sequence(wave), Duration.Inf)
       specs.map { case (table, _, _, _) =>
         table -> counts.getOrElse(table, 0L) }.toMap
@@ -283,11 +294,12 @@ object Dims {
     try {
       val counts = assigned.groupBy(col("_dim")).count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val wave = specs.map { case (table, k1, k2) => Future {
-        wh.append(table, assigned.filter(col("_dim") === table)
-          .select(col("id"), col("_k1").as(k1), col("_k2").as(k2)))
-        wh.recordMaxId(table, offsets(table) + counts.getOrElse(table, 0L))
-      } }
+      val wave = specs.filter { case (table, _, _) => needsAppend(wh, table, counts) }
+        .map { case (table, k1, k2) => Future {
+          wh.append(table, assigned.filter(col("_dim") === table)
+            .select(col("id"), col("_k1").as(k1), col("_k2").as(k2)))
+          wh.recordMaxId(table, offsets(table) + counts.getOrElse(table, 0L))
+        } }
       Await.result(Future.sequence(wave), Duration.Inf)
       specs.map { case (table, _, _) =>
         table -> counts.getOrElse(table, 0L) }.toMap

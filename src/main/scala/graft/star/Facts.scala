@@ -79,7 +79,10 @@ object Facts {
     val incoming = resolveVehicleAttrs(wh, staging)
       .withColumn("_bucket", vehicleBucket(col("vin"), col("auction_id")))
       .withColumn("_inc", lit(1))
-    val withIds = wh.readIfExists("vehicle_dim") match {
+    // ONE read of the table (each read lists all bucket directories) feeds
+    // both the bucket merge and the max-id fallback below
+    val existingDim = wh.readIfExists("vehicle_dim")
+    val withIds = existingDim match {
       case None => incoming.drop("_inc")
         .withColumn("vehicle_id", lit(null).cast("long"))
       case Some(existing) =>
@@ -115,7 +118,7 @@ object Facts {
     // high-water mark: known from the previous load's write observation
     // ([[writeVehicleDim]]) when this Warehouse instance did it — otherwise
     // one column-pruned scalar scan
-    val maxId = wh.readIfExists("vehicle_dim")
+    val maxId = existingDim
       .map(t => wh.cachedMaxId("vehicle_dim")(
         t.agg(coalesce(max(col("vehicle_id")), lit(0L))).head().getLong(0)))
       .getOrElse(0L)

@@ -91,7 +91,13 @@ object StarLoad {
 
   /** Full star load from a processed/silver frame. `staging` is cached for
     * the duration — all 11 load steps scan it, and at warehouse scale
-    * re-reading the staging table per step is the dominant repeated cost. */
+    * re-reading the staging table per step is the dominant repeated cost.
+    *
+    * In local mode the load is bound by driver round-trips, not data. A
+    * repeat load through the same [[Warehouse]] runs no schema-inference
+    * job (schemas are remembered per table), appends only the dims that
+    * gained rows (an unchanged dim keeps its cached frame and high-water
+    * mark), and lists vehicle_dim's bucket directories once. */
   def run(wh: Warehouse, processed: DataFrame): Unit = {
     StateSeed.ensureSeeded(wh)
     val staging = stagedFrame(processed)

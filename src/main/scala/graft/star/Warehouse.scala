@@ -2,6 +2,7 @@ package graft.star
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed warehouse: one directory per table under `dir`. Stands in
   * for the reference's Postgres schema (no JDBC target in this harness —
@@ -25,7 +26,25 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     }
   }
 
-  def read(table: String): DataFrame = spark.read.parquet(path(table).toString)
+  // Table schemas as first inferred: every `spark.read.parquet` without a
+  // schema runs a one-task footer-inference job, and a star load reads its
+  // tables ~13 times. Appends and partition overwrites keep the columns, so
+  // they keep the entry; a full `overwrite` may change them and drops it.
+  // Per instance: a rewrite through another Warehouse on the same dir is
+  // not seen.
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
+
+  /** Reads `table`, passing its remembered schema after the first read. */
+  def read(table: String): DataFrame = {
+    val p = path(table).toString
+    schemas.get(table) match {
+      case Some(s) => spark.read.schema(s).parquet(p)
+      case None =>
+        val df = spark.read.parquet(p)
+        schemas.putIfAbsent(table, df.schema)
+        df
+    }
+  }
 
   def readIfExists(table: String): Option[DataFrame] =
     if (exists(table)) Some(read(table)) else None
@@ -101,10 +120,11 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     * count-then-append double action — each of which re-runs the full input
     * plan (anti-join, resolution joins) at warehouse scale — and removes the
     * need to persist the input just to keep the two actions consistent.
-    * Appending zero rows is safe: Spark writes a schema-bearing empty part
-    * file, so a table created by an empty append is readable (valid schema,
-    * zero rows) — and [[exists]] additionally guards against _SUCCESS-only
-    * dirs, which would fail schema inference. */
+    * Appending zero rows is safe but not free: Spark writes a schema-bearing
+    * empty part file (so a table created by an empty append is readable with
+    * zero rows, and [[exists]] guards against _SUCCESS-only dirs), and the
+    * write still drops the table's read cache. Callers that know the delta
+    * is empty ([[Dims.loadSimpleDimsFused]]) skip the append instead. */
   def appendCounted(table: String, df: DataFrame): Long = {
     val obs = org.apache.spark.sql.Observation()
     df.observe(obs, org.apache.spark.sql.functions.count(
@@ -148,6 +168,7 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     probe("swapped")
     if (hadOld) fs.delete(aside, true)
     probe("cleaned")
+    schemas.remove(table)
     invalidate(table)
   }
 

@@ -78,4 +78,34 @@ class WarehouseCacheSpec extends AnyFunSuite {
     assert(wh.appendCounted("t", empty) == 0L)
     assert(wh.read("t").count() == 3L)
   }
+
+  test("remembered schemas: later reads infer nothing, and never hide a write") {
+    val wh = new Warehouse(spark, Files.createTempDirectory("graft_whschema").toString)
+    import org.apache.spark.sql.functions.col
+
+    wh.append("t", Seq((1L, "a")).toDF("id", "k"))
+    assert(wh.read("t").count() == 1L)
+    // positive control: the memo is live, so the checks below are not vacuous
+    val reread = JobCount.during(spark)(wh.read("t"))
+    assert(reread.schemaInferences.isEmpty, s"second read inferred: ${reread.jobs}")
+
+    // append keeps the schema; the appended rows are visible
+    wh.append("t", Seq((2L, "b")).toDF("id", "k"))
+    assert(wh.read("t").select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+
+    // overwrite with another column set: the read returns the NEW columns
+    wh.overwrite("t", Seq((3L, 4.5, true)).toDF("id", "score", "flag"))
+    val after = wh.read("t")
+    assert(after.columns.toSeq == Seq("id", "score", "flag"))
+    assert(after.head() == org.apache.spark.sql.Row(3L, 4.5, true))
+
+    // a partition overwrite adding a partition value: the new partition shows
+    wh.overwritePartitions("p", Seq((1L, 0)).toDF("id", "part"), "part")
+    assert(wh.read("p").count() == 1L)
+    wh.overwritePartitions("p", Seq((2L, 7)).toDF("id", "part"), "part")
+    val parts = wh.read("p")
+    assert(parts.columns.toSeq == Seq("id", "part"))
+    assert(parts.filter(col("part") === 7).select("id").as[Long].collect().toSeq == Seq(2L))
+    assert(parts.count() == 2L)
+  }
 }

@@ -24,6 +24,9 @@ def run_spark(sfdir: str, outdir: str) -> None:
     if r.returncode != 0:
         print(r.stdout[-4000:])
         print(r.stderr[-4000:])
+        failed = Path(outdir) / "failed.txt"
+        if failed.exists():
+            print("failed queries:", failed.read_text().split() or "none")
         sys.exit(1)
 
 
