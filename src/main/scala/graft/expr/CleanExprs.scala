@@ -44,7 +44,6 @@ object CleanExprs {
 
   /** E6 (T:172, T:319-325): `pd.to_numeric(errors='coerce')`. */
   def coerceLong(c: Column): Column = c.try_cast("long")
-  def coerceDouble(c: Column): Column = c.try_cast("double")
 
   /** E7 (T:175-180 + defaults T:68-69): stringify, strip commas, coerce,
     * default 0. */
@@ -145,9 +144,6 @@ object CleanExprs {
   def manufactureYear(url: Column): Column =
     element_at(split(element_at(split(trim(url), "/"), -1), "-"), 1).try_cast("int")
 
-  /** E18 (Q:188): epoch-millis → timestamp (NDJSON round-trip). */
-  def epochMillisToTs(c: Column): Column = timestamp_millis(c.cast("long"))
-
   /** E19 (Q:9-221): key normalization used identically at dim load and lookup
     * sites. mode: "lower" | "upper" | "none". */
   def normKey(c: Column, mode: String = "lower"): Column = mode match {
@@ -155,7 +151,4 @@ object CleanExprs {
     case "upper" => trim(upper(c))
     case _ => trim(c)
   }
-
-  /** E21 (T:363): date partition key. */
-  def dateKey(ts: Column): Column = to_date(ts)
 }

@@ -466,9 +466,4 @@ object Multimodal {
     * partition by n_bytes to even out per-task work (skew control at scale). */
   def partitionBySize(df: DataFrame, partitions: Int): DataFrame =
     df.repartitionByRange(partitions, col("meta.n_bytes"), col("media_id"))
-
-  /** Frame-sample stub: every `stride`-th frame index up to n_frames — the
-    * plumbing for video frame extraction (indices only; decode is stubbed). */
-  def frameSampleIndices(nFramesCol: org.apache.spark.sql.Column, stride: Int): org.apache.spark.sql.Column =
-    sequence(lit(0), greatest(nFramesCol - 1, lit(0)), lit(stride))
 }

@@ -318,10 +318,9 @@ object AuctionQueries {
 
   /** q198's star-load CTEs: `update_dims.sql:8-223` over the silver staging
     * on a FRESH warehouse — every dim is DISTINCT normalized keys +
-    * row_number ids over key order (the `Dims.insertOnlyNew` /
-    * `Ids.assignSequentialIds` order: keys ASC NULLS LAST, offset 0), the
-    * vehicle dim resolves all 20 attributes (Q:118-157), the fact all six
-    * surrogates (Q:181-223). */
+    * row_number ids over key order (the `Dims` order: keys ASC NULLS
+    * LAST, offset 0), the vehicle dim resolves all 20 attributes
+    * (Q:118-157), the fact all six surrogates (Q:181-223). */
   private val starCtes: String = s"""staging AS (
 $silverSelect),
 state_dim AS (

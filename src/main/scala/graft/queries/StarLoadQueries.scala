@@ -144,22 +144,8 @@ object StarLoadQueries {
       .withColumn("model", lit("ModelNew"))
       .withColumn("auction_status", lit("Reserve Not Met"))
     val batch2 = full.filter(key > 26000).unionByName(corrections)
-    // two sequential composed loads. The pipelined variant
-    // (StarLoad.runPipelined — batch 2's dim phase overlapping batch 1's
-    // vehicle+fact tail) measured SLOWER here at both local[8] and
-    // local[32] (13.5s vs 14.9s warm at 32): the composed load is
-    // driver-action-latency bound, and the overlapped phases contend on the
-    // same scheduler instead of using disjoint resources as they would on a
-    // real cluster.
-    // env toggle for A/B-measuring the pipelined micro-batch form under
-    // bench conditions (spec-proven equivalent; see StarLoadSpec) — the
-    // default stays sequential, the measured faster shape in local mode
-    if (sys.env.contains("GRAFT_Q49_PIPELINED"))
-      StarLoad.runPipelined(wh, Seq(batch1, batch2))
-    else {
-      StarLoad.run(wh, batch1)
-      StarLoad.run(wh, batch2)
-    }
+    StarLoad.run(wh, batch1)
+    StarLoad.run(wh, batch2)
     wh.close() // see q44 — release dim-cache blocks; readBack reads disk
     readBack(wh)
   }
@@ -250,7 +236,7 @@ object StarLoadQueries {
       |    'https://x/a/' || o_orderkey AS auction_url
       |  FROM orders WHERE $where""".stripMargin
 
-  /** Incremental simple-dim transliteration of `Dims.insertOnlyNew` across
+  /** Incremental simple-dim transliteration of the `Dims` id rule across
     * two loads: batch-1 keys get row_number ids over key order; batch-2 NEW
     * keys continue from count(batch-1) (= max existing id on a fresh
     * warehouse); existing keys are untouched. */
@@ -266,8 +252,8 @@ $name AS (
 
   /** The full `update_dims.sql` transliteration: every dim is DISTINCT
     * normalized keys + row_number surrogate ids over key order (the
-    * insert-only-new shape on an empty warehouse — `Dims.insertOnlyNew`
-    * assigns row_number over keys asc-nulls-last plus max(existing)=0);
+    * insert-only-new shape on an empty warehouse — `Dims` assigns
+    * row_number over keys asc-nulls-last plus max(existing)=0);
     * vehicle_dim ids order by (vin, auction_id); the fact resolves all six
     * surrogates exactly as `Facts.insertAuctionFact`. The keep-newest staging
     * dedup is omitted because synthetic auction_ids are unique (A4 has its
@@ -382,7 +368,7 @@ $name AS (
 
     /* The two-load incremental differential (see q49IncrementalLoad's doc).
      * Batch-2 dim ids continue from COUNT(batch-1) — on a fresh warehouse
-     * max(existing id) = count, so this replays `Dims.insertOnlyNew`.
+     * max(existing id) = count, so this replays the `Dims` id rule.
      * vehicle_dim replays the three-way upsert split (keep / update-in-place
      * keeping vid / fresh ids continuing from count); the fact replays
      * ON CONFLICT DO NOTHING via the NOT IN guard on batch-1 auction_ids. */

@@ -55,7 +55,7 @@ object Facts {
     * DO UPDATE preserves the PK). New rows get max(existing)+row_number.
     *
     * Scale shape: the dim is hash-bucketed by key on disk; only buckets
-    * containing incoming keys are read (partition-pruned semi join) and
+    * containing incoming keys are read (a static partition filter) and
     * rewritten (dynamic partition overwrite) — never the whole table. The
     * `maxId` scalar agg scans one column of the full dim (column-pruned);
     * fresh-key id assignment is a range-shuffled sort + `zipWithIndex`
@@ -90,11 +90,15 @@ object Facts {
         // The bucket is a pure function of the STAGED key columns, so the
         // affected set derives straight from the (cached) staging frame —
         // deriving it from `incoming` instead would execute the whole 5-way
-        // attr resolution a second time just to feed this broadcast
+        // attr resolution a second time. It holds at most VehicleDimBuckets
+        // values, so ONE job (a set per partition, no shuffle) brings it to
+        // the driver and the bucket filter prunes statically; a broadcast
+        // semi-join of a DISTINCT costs a shuffle job plus a broadcast job
         val affected = staging
-          .select(vehicleBucket(trim(col("vin")), col("auction_id")).as("_bucket"))
-          .distinct()
-        val hit = existing.join(broadcast(affected), Seq("_bucket"), "left_semi")
+          .select(vehicleBucket(trim(col("vin")), col("auction_id")))
+          .rdd.mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
+          .collect().toSeq.flatten.distinct.sorted
+        val hit = existing.filter(col("_bucket").isin(affected: _*))
           .withColumn("_inc", lit(0))
         val union = incoming.withColumn("vehicle_id", lit(null).cast("long"))
           .unionByName(hit)

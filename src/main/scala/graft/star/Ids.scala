@@ -7,15 +7,15 @@ import org.apache.spark.sql.types.LongType
 /** Deterministic DISTRIBUTED sequential-id assignment: a range-shuffled
   * global sort on the natural keys, then `zipWithIndex` + offset — the exact
   * total order `row_number() OVER (ORDER BY keys ASC NULLS LAST)` yields,
-  * with no single-partition WindowExec. Shared by the fact-scale fresh-key
-  * path ([[Facts.upsertVehicleDim]]) and the dim insert-only path
-  * ([[Dims.insertOnlyNew]]): even when the input is "known small" (dim
-  * deltas), the window form funnels it through one task and warns; this
-  * shape stays partitioned at any cardinality. `zipWithIndex` costs one
-  * extra partition-size job, but its shuffle map stages are shared with the
-  * consuming write job (Spark stage reuse), so the input plan still
-  * executes once. Reference semantics: `update_dims.sql`:8-223 (serial
-  * nextval over ordered distinct candidates).
+  * with no single-partition WindowExec. Used by the fact-scale fresh-key
+  * path ([[Facts.assignFreshIds]]) and the corpus shuffle
+  * ([[graft.ext.Sampling.deterministicShuffle]]): the window form funnels
+  * its input through one task and warns; this shape stays partitioned at
+  * any cardinality. `zipWithIndex` costs one extra partition-size job, but
+  * its shuffle map stages are shared with the consuming write job (Spark
+  * stage reuse), so the input plan still executes once. Reference
+  * semantics: `update_dims.sql`:8-223 (serial nextval over ordered distinct
+  * candidates).
   */
 object Ids {
 

@@ -17,81 +17,31 @@ import graft.util.Exec
   *
   * The reference's single Postgres transaction becomes write ordering over
   * idempotent steps (U1 anti-join / U2 keyed upsert make re-runs safe —
-  * SURVEY.md §4).
+  * SURVEY.md §4). The load never touches session conf, so it is safe to run
+  * next to other queries on a shared session.
   */
 object StarLoad {
 
   // dedicated pool, NOT ExecutionContext.global — see graft.util.Exec
   private implicit val ec: ExecutionContext = Exec.loadEc
 
-  /** U3 + P5 + A4 (L:84-107): project the warehouse columns, keep-newest per
-    * auction_id, truncate-load `staging`. Returns the staged frame PERSISTED
-    * (MEMORY_AND_DISK): the write job itself materializes the cache, so the
-    * eleven downstream load steps read memory blocks with no extra
-    * count-to-materialize action and no parquet read-back. Caller unpersists. */
-  def loadStaging(wh: Warehouse, processed: DataFrame): DataFrame = {
-    val deduped = stagedFrame(processed)
-    wh.truncateInsert("staging", deduped)
-    deduped
-  }
-
-  /** The persisted keep-newest staging frame WITHOUT the table write — so
-    * [[run]] can overlap the staging dump with the dim wave (both consume
-    * this frame; nothing in the load reads the staging TABLE back). */
+  /** U3 + P5 + A4 (L:84-107): the 45 warehouse columns, keep-newest per
+    * auction_id, PERSISTED (MEMORY_AND_DISK) — every load step reads this
+    * frame, never the staging TABLE back. */
   private def stagedFrame(processed: DataFrame): DataFrame =
     Silver.keepNewest(processed.select(Schemas.insertColumns.map(col): _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** The dim phase as TWO fused passes: the seven single-key dims (six
-    * simple + make) in one staging scan ([[Dims.loadSimpleDimsFused]]),
-    * then city + model — the two compound-key dims — in a second
-    * ([[Dims.loadCompoundDimsFused]], which must see the just-loaded make
-    * dim). Nine per-dim DISTINCT scans of staging become two; the driver
-    * action count drops ~20 → ~11. Results are identical to the per-dim
-    * chains: each dim's candidate set, key order, and id offsets are
-    * preserved (q44/q49 hash-verified). */
-  private def dimPhase(wh: Warehouse, staging: DataFrame): Unit = {
-    Dims.loadSimpleDimsFused(wh, staging)
-    Dims.loadCompoundDimsFused(wh, staging)
-    ()
-  }
-
-  /** The dim phase under latency-tuned session conf: AQE's per-stage
-    * materialization barrier and a per-core shuffle fan-out only add driver
-    * round-trips to ~20 small actions over bounded deltas with fully static
-    * plans (explicit broadcasts, DISTINCT on tiny key sets) — measured ~20%
-    * of composed-load wall time at sf0.1. Fact-scale stages are NOT run
-    * under this: they keep AQE's runtime skew/broadcast decisions, which DO
-    * matter at warehouse scale. */
-  private def dimPhaseTuned(wh: Warehouse, staging: DataFrame): Unit = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val shufKey = "spark.sql.shuffle.partitions"
-    val aqeWas = wh.spark.conf.get(aqeKey)
-    val shufWas = wh.spark.conf.get(shufKey)
-    try {
-      wh.spark.conf.set(aqeKey, "false")
-      wh.spark.conf.set(shufKey, "8")
-      dimPhase(wh, staging)
-    } finally {
-      wh.spark.conf.set(aqeKey, aqeWas)
-      wh.spark.conf.set(shufKey, shufWas)
-    }
-  }
-
-  /** The vehicle + fact tail: the fact's vehicle resolution consumes the
-    * merged in-memory frame (sufficient for all currently-staged keys — see
-    * [[Facts.mergedVehicleDim]]) while the bucket write streams to disk
-    * concurrently. */
-  private def vehicleFactTail(wh: Warehouse, staging: DataFrame): Unit = {
-    val (mergedVehicle, prevMax) = Facts.mergedVehicleDim(wh, staging)
-    val writeF = Future(Facts.writeVehicleDim(wh, mergedVehicle, prevMax))
-    Facts.insertAuctionFact(wh, staging, Some(mergedVehicle))
-    Await.result(writeF, Duration.Inf)
-  }
-
   /** Full star load from a processed/silver frame. `staging` is cached for
     * the duration — all 11 load steps scan it, and at warehouse scale
     * re-reading the staging table per step is the dominant repeated cost.
+    *
+    * The dim phase is TWO fused passes: the seven single-key dims (six
+    * simple + make) in one staging scan ([[Dims.loadSimpleDimsFused]]),
+    * then city + model, the two compound-key dims, in a second
+    * ([[Dims.loadCompoundDimsFused]], which must see the just-loaded make
+    * dim). The vehicle + fact tail follows; the staging TABLE dump overlaps
+    * only that tail.
     *
     * In local mode the load is bound by driver round-trips, not data. A
     * repeat load through the same [[Warehouse]] runs no schema-inference
@@ -102,73 +52,27 @@ object StarLoad {
     StateSeed.ensureSeeded(wh)
     val staging = stagedFrame(processed)
     try {
-      // no explicit materialization action: the dim phase is now serial-
-      // within (two fused passes), so its FIRST action materializes the
-      // staging cache before anything fans out — the cold-cache race
-      // (Spark's block cache has no per-partition compute lock; concurrent
-      // jobs each recompute the keepNewest window, measured 2× load wall
-      // time at local[32]) needs concurrency to bite, and the staging-dump
-      // future only starts after the dim phase below
-      dimPhaseTuned(wh, staging)
+      // the dim phase runs first and alone: its first action fills the
+      // staging cache. Spark's block cache has no per-partition compute
+      // lock, so jobs started on a cold cache each recompute the
+      // keepNewest window (measured 2× load wall time at local[32]); the
+      // staging dump therefore starts only once the cache is warm
+      Dims.loadSimpleDimsFused(wh, staging)
+      Dims.loadCompoundDimsFused(wh, staging)
       // the staging TABLE dump (U3 semantics) overlaps the vehicle+fact
-      // tail — NOT the dim phase: dimPhaseTuned mutates session conf, and a
-      // concurrent write planning inside that window would silently pick up
-      // the latency conf (the race runPipelined documents). The tail never
-      // touches conf, so the overlap is safe here; every load step reads
-      // the materialized frame, never the table.
+      // tail; every load step reads the cached frame, never the table
       val stagingWrite = Future(wh.truncateInsert("staging", staging))
-      vehicleFactTail(wh, staging)
+      // the fact's vehicle resolution consumes the merged in-memory frame
+      // (sufficient for all currently-staged keys — see
+      // Facts.mergedVehicleDim) while the bucket write streams to disk
+      val (mergedVehicle, prevMax) = Facts.mergedVehicleDim(wh, staging)
+      val vehicleWrite = Future(Facts.writeVehicleDim(wh, mergedVehicle, prevMax))
+      Facts.insertAuctionFact(wh, staging, Some(mergedVehicle))
+      Await.result(vehicleWrite, Duration.Inf)
       Await.result(stagingWrite, Duration.Inf)
     } finally {
       staging.unpersist()
       ()
     }
-  }
-
-  /** PIPELINED incremental loads — the micro-batch form of [[run]]: batch
-    * i+1's staging build and dim phase overlap batch i's vehicle+fact tail.
-    * Legal because the dim phase of batch i+1 depends only on the DIMS as of
-    * batch i (complete before the tail starts), never on batch i's vehicle
-    * or fact writes; the tails themselves stay strictly ordered (vehicle
-    * i+1 reads the table batch i wrote; fact i+1 anti-joins batch i's
-    * rows). Dim appends racing the previous tail's dim READS are safe:
-    * appends commit file-atomically (rename), dims are append-only with
-    * stable ids, and a resolution join against a superset of its load's
-    * dims matches exactly the same rows (keys not in its staging never
-    * join). Staging dumps chain so the table ends as the LAST batch's
-    * staging (U3 truncate semantics).
-    *
-    * Session conf is left untouched: phases from different batches
-    * interleave, so the per-phase latency toggle [[run]] uses would race
-    * with the concurrent tail's plan construction.
-    *
-    * Measured caveat (sf0.1, local[8] and local[32]): sequential [[run]]
-    * calls are FASTER in local mode — the composed load is
-    * driver-action-latency bound and overlapped phases contend on one
-    * scheduler. This path is for real clusters, where a batch's dim wave
-    * (driver-latency bound) and the previous tail (executor bound) use
-    * disjoint resources; q49 uses sequential [[run]]s. */
-  def runPipelined(wh: Warehouse, batches: Seq[DataFrame]): Unit = {
-    StateSeed.ensureSeeded(wh)
-    val staged = batches.map(stagedFrame)
-    try {
-      var prevTail: Future[Unit] = Future.successful(())
-      var stagingWrites: Future[Unit] = Future.successful(())
-      staged.foreach { s =>
-        s.count() // materialize once before fan-out (see run())
-        val prevWrites = stagingWrites
-        stagingWrites = Future {
-          // truncate-inserts share a temp dir — serialize them; final table
-          // state = last batch's staging either way
-          Await.result(prevWrites, Duration.Inf)
-          wh.truncateInsert("staging", s)
-        }
-        dimPhase(wh, s) // overlaps the previous batch's vehicle+fact tail
-        Await.result(prevTail, Duration.Inf)
-        prevTail = Future(vehicleFactTail(wh, s))
-      }
-      Await.result(prevTail, Duration.Inf)
-      Await.result(stagingWrites, Duration.Inf)
-    } finally staged.foreach(_.unpersist())
   }
 }

@@ -149,16 +149,7 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
                                         probe: String => Unit): Unit = {
     val tmp = new Path(s"$dir/.${table}_tmp")
     val aside = new Path(s"$dir/.${table}_old")
-    // Tag the write's jobs (thread-local, so concurrent loads don't cross):
-    // specs assert the session conf its jobs ran under — e.g. that an
-    // overlapped staging dump never plans inside a latency-conf window
-    // (StarLoad.run's toggle scoping).
-    val sc = spark.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft.overwrite:$table")
-    try {
-      df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    } finally sc.setJobDescription(prevDesc)
+    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     probe("staged")
     if (fs.exists(aside)) fs.delete(aside, true)
     val target = path(table)

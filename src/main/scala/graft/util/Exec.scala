@@ -4,20 +4,18 @@ import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
 import scala.concurrent.ExecutionContext
 
-/** Dedicated executor for overlapped Spark ACTIONS (dim waves, staging
-  * dumps, vehicle-write/fact overlap).
+/** Dedicated executor for overlapped Spark ACTIONS (dim append waves,
+  * staging dumps, vehicle-write/fact overlap).
   *
   * Never run SQL actions on `ExecutionContext.global`: Spark local
   * properties (job group, description, and every session conf that
   * `SQLExecution.withSQLConfPropagated` pins for a running action) live in
   * an `InheritableThreadLocal`, and ForkJoinPool creates workers from
   * whatever thread triggers growth — including compensation threads spawned
-  * from a worker that is BLOCKED mid-action. A worker born inside a
-  * conf-toggled action inherits those properties and keeps them forever, so
-  * any later action scheduled onto it reports — and propagates to its
-  * tasks — stale conf (caught by StarLoadSpec: a staging dump whose jobs
-  * carried the dim phase's `adaptive.enabled=false` long after the session
-  * conf was restored).
+  * from a worker that is BLOCKED mid-action. A worker born inside an
+  * action inherits those properties and keeps them forever, so any later
+  * action scheduled onto it reports — and propagates to its tasks — the
+  * stale values.
   *
   * A plain cached ThreadPoolExecutor never self-spawns: threads are created
   * only at submit time, from the orchestration thread, which holds no

@@ -1,6 +1,7 @@
 package graft
 
 import java.util.UUID
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -20,8 +21,12 @@ object JobCount {
   /** `finalStage`: the result stage's name, Spark's short call site
     * (`<last Spark method> at <File>.scala:<line>`); `sparkMethod`: the
     * first line of its long call site, the Spark frame the job came from
-    * (a read and a write both show `parquet at …` as the short name). */
-  final case class Job(finalStage: String, sparkMethod: String, description: String)
+    * (a read and a write both show `parquet at …` as the short name);
+    * `sqlConf`: the `spark.sql.*` properties the job started with — the
+    * session conf Spark SQL pinned for it (only keys set on the session,
+    * not defaults; empty for jobs run outside Spark SQL). */
+  final case class Job(finalStage: String, sparkMethod: String, description: String,
+                       sqlConf: Map[String, String])
 
   private val GroupKey = "spark.jobGroup.id"
 
@@ -40,8 +45,11 @@ object JobCount {
         val props = Option(js.properties)
         if (props.exists(_.getProperty(GroupKey) == group)) {
           val last = js.stageInfos.maxBy(_.stageId)
+          val sqlConf = props.toSeq.flatMap(_.stringPropertyNames.asScala)
+            .filter(_.startsWith("spark.sql.")).map(k => k -> props.get.getProperty(k)).toMap
           seen.put(js.jobId, Job(last.name, last.details.linesIterator.nextOption().getOrElse(""),
-            props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")))
+            props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""),
+            sqlConf))
         }
       }
     }
@@ -52,7 +60,6 @@ object JobCount {
       try body finally sc.setLocalProperty(GroupKey, prev)
       org.apache.spark.graft.ListenerDrain(sc)
     } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
     JobCount(seen.values().asScala.toSeq)
   }
 }

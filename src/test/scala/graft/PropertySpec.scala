@@ -119,7 +119,7 @@ class PropertySpec extends AnyFunSuite {
     val batches = Seq(Seq("a", "b"), Seq("b", "c", "d"), Seq.empty,
       Seq("a", "d", "e"), Seq("f"), Seq("a", "b", "c", "d", "e", "f"))
     batches.foreach { ks =>
-      graft.star.Dims.insertOnlyNew(wh, "prop_dim", candidates(ks), Seq("k"))
+      graft.star.PerDimLoads.insertOnlyNew(wh, "prop_dim", candidates(ks), Seq("k"))
       val now = wh.read("prop_dim").collect().map(r => r.getString(1) -> r.getLong(0)).toMap
       seen.foreach { case (k, id) => assert(now(k) == id, s"id for $k changed") }
       assert(now.keySet.size == now.values.toSet.size, "duplicate surrogate ids")

@@ -25,7 +25,10 @@ class StarLoadSpec extends AnyFunSuite {
     * measured when empty dim appends and schema inference were cut: 31 or
     * 32 over 36 runs (the extra one is a one-task broadcast job that shows
     * or not with the timing of the load's overlapped writes). The same load
-    * ran 60 jobs, 12 of them schema inference, before. */
+    * ran 60 jobs, 12 of them schema inference, before. Running the dim
+    * phase under the session's AQE added a job, which the vehicle merge
+    * gave back (its affected-bucket set is one job, not a shuffle job plus
+    * a broadcast job). */
   private val RepeatLoadJobBound = 32
 
   private def silverDf(rows: Seq[org.apache.spark.sql.Row]) =
@@ -123,34 +126,6 @@ class StarLoadSpec extends AnyFunSuite {
     assert(wh.read("auction_fact").count() == 4 && wh.read("vehicle_dim").count() == 4)
   }
 
-  test("pipelined micro-batch loads ≡ sequential runs (tables hash-equal)") {
-    // runPipelined overlaps batch i+1's dim phase with batch i's
-    // vehicle+fact tail; every table must come out identical to two
-    // sequential run()s — same dim ids, same vehicle ids, same fact rows
-    val b1 = silverDf(Seq(
-      silverRow("A1", "VINA", "Sold", "Ford", "Dallas", "TX", 45000L),
-      silverRow("A2", "VINB", "Reserve not met", "Mazda", "Austin", "TX", 60000L)))
-    val b2 = silverDf(Seq(
-      silverRow("A1", "VINA", "Sold", "Ford", "Dallas", "TX", 99999L), // U2 correction
-      silverRow("A3", "VINC", "Sold", "Honda", "Reno", "NV", 5L)))     // new key + new dims
-    val whSeq = new Warehouse(spark, Files.createTempDirectory("graft_wh_seq").toString)
-    StarLoad.run(whSeq, b1)
-    StarLoad.run(whSeq, b2)
-    val whPipe = new Warehouse(spark, Files.createTempDirectory("graft_wh_pipe").toString)
-    StarLoad.runPipelined(whPipe, Seq(b1, b2))
-    val tables = Seq("auction_status_dim", "reserve_status_dim", "body_style_dim",
-      "seller_type_dim", "drivetrain_dim", "transmission_dim", "city_dim",
-      "vehicle_make_dim", "vehicle_model_dim", "vehicle_dim", "auction_fact", "staging")
-    tables.foreach { t =>
-      val a = whSeq.read(t)
-      val b = whPipe.read(t)
-      val cols = a.columns.sorted.map(col).toSeq
-      assert(a.select(cols: _*).exceptAll(b.select(cols: _*)).isEmpty &&
-        b.select(cols: _*).exceptAll(a.select(cols: _*)).isEmpty,
-        s"table $t differs between sequential and pipelined loads")
-    }
-  }
-
   test("U2 upsert rewrites only the buckets containing incoming keys") {
     val whDir = Files.createTempDirectory("graft_wh_bkt").toString
     val wh = new Warehouse(spark, whDir)
@@ -225,7 +200,7 @@ class StarLoadSpec extends AnyFunSuite {
   }
 
   test("fused dim loads ≡ per-dim loads: fresh, incremental, null keys") {
-    import graft.star.{Dims, StateSeed}
+    import graft.star.{Dims, PerDimLoads, StateSeed}
     val dimTables = Seq("auction_status_dim", "reserve_status_dim", "body_style_dim",
       "seller_type_dim", "drivetrain_dim", "transmission_dim",
       "vehicle_make_dim", "city_dim", "vehicle_model_dim")
@@ -234,10 +209,10 @@ class StarLoadSpec extends AnyFunSuite {
     StateSeed.ensureSeeded(whSeq)
     StateSeed.ensureSeeded(whFused)
     def perDim(staging: org.apache.spark.sql.DataFrame): Unit = {
-      Dims.loadAllSimple(whSeq, staging)
-      Dims.loadCityDim(whSeq, staging)
-      Dims.loadMakeDim(whSeq, staging)
-      Dims.loadModelDim(whSeq, staging)
+      PerDimLoads.loadAllSimple(whSeq, staging)
+      PerDimLoads.loadCityDim(whSeq, staging)
+      PerDimLoads.loadMakeDim(whSeq, staging)
+      PerDimLoads.loadModelDim(whSeq, staging)
     }
     def fused(staging: org.apache.spark.sql.DataFrame): Unit = {
       Dims.loadSimpleDimsFused(whFused, staging)
@@ -271,44 +246,63 @@ class StarLoadSpec extends AnyFunSuite {
     assert(whFused.read("vehicle_model_dim").filter(col("make_id").isNull).count() == 1)
   }
 
-  test("staging dump jobs never run under the dim-phase latency conf") {
-    // StarLoad.run toggles AQE off / shuffle.partitions=8 for the dim phase
-    // on the SHARED session; the overlapped staging table dump must never
-    // plan inside that window. Session SQL confs propagate into each job's
-    // start properties (SQLExecution.withSQLConfPropagated), so the jobs
-    // tagged graft.overwrite:staging carry the conf they actually ran under.
-    val jobs = scala.collection.concurrent.TrieMap[Int, (String, String, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val p = Option(js.properties)
-        jobs(js.jobId) = (
-          p.flatMap(x => Option(x.getProperty("spark.job.description"))).getOrElse(""),
-          p.flatMap(x => Option(x.getProperty("spark.sql.adaptive.enabled"))).getOrElse(""),
-          p.flatMap(x => Option(x.getProperty("spark.sql.shuffle.partitions"))).getOrElse(""))
-      }
+  test("a star load beside a conf-sensitive query keeps the session conf") {
+    // Verify's pool runs the star-load queries beside other queries on one
+    // session: the load must neither change the session conf nor run any
+    // job under other values, and neither side's result may depend on the
+    // other running
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    def sessionConf(): Map[String, String] = keys.map(k => k -> spark.conf.get(k)).toMap
+    val before = sessionConf()
+    // conf-sensitive: shuffle.partitions sets how many partitions the hash
+    // repartition fans out to, and AQE coalesces them
+    def probe(): Long = spark.range(0, 64, 1, 4).repartition(col("id"))
+      .select(spark_partition_id().as("p")).distinct().count()
+    val batch = silverDf(Seq(
+      silverRow("A1", "VINA", "Sold", "Ford", "Dallas", "TX", 1L),
+      silverRow("A2", "VINB", "Reserve not met", "Kia", "Reno", "NV", 2L),
+      silverRow("A3", "VINC", "Sold", null, "Nowhere", "ZZ", 3L)))
+    val serialProbe = probe()
+    val whSerial = new Warehouse(spark, Files.createTempDirectory("graft_wh_serial").toString)
+    StarLoad.run(whSerial, batch)
+
+    val whConc = new Warehouse(spark, Files.createTempDirectory("graft_wh_conc").toString)
+    val probes = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Map[String, String])]()
+    val jobs = JobCount.during(spark) {
+      def task(f: => Unit): java.util.concurrent.Callable[Unit] = () => f
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val load = pool.submit(task(StarLoad.run(whConc, batch)))
+        // probe until the load is done, reading the session conf each round
+        pool.submit(task {
+          var i = 0
+          while (i == 0 || (!load.isDone && i < 200)) {
+            probes.add(probe() -> sessionConf())
+            i += 1
+          }
+        }).get()
+        load.get()
+      } finally pool.shutdown()
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val wh = new Warehouse(spark, Files.createTempDirectory("graft_wh_conf").toString)
-      StarLoad.run(wh, silverDf(Seq(
-        silverRow("A1", "VINA", "Sold", "Ford", "Dallas", "TX", 1L),
-        silverRow("A2", "VINB", "Sold", "Kia", "Reno", "NV", 2L))))
-      // listener bus is async — wait for both the staging-dump jobs and the
-      // positive control (a dim-phase job showing the toggled conf) to land
-      val deadline = System.nanoTime() + 10000000000L
-      def stagingJobs = jobs.values.filter(_._1.startsWith("graft.overwrite:staging"))
-      def toggledSeen = jobs.values.exists(v => v._2 == "false" && v._3 == "8")
-      while ((stagingJobs.isEmpty || !toggledSeen) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      // positive control: the toggle IS visible in job properties (otherwise
-      // the staging assertion below would pass vacuously)
-      assert(toggledSeen, s"no job recorded the dim-phase conf toggle: ${jobs.values}")
-      assert(stagingJobs.nonEmpty, s"no staging-dump job observed: ${jobs.values}")
-      stagingJobs.foreach { case (desc, aqe, shuf) =>
-        assert(aqe != "false", s"staging dump '$desc' planned with AQE off")
-        assert(shuf != "8", s"staging dump '$desc' planned with latency shuffle conf")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+
+    assert(sessionConf() == before, "the load left the session conf changed")
+    probes.forEach { case (result, conf) =>
+      assert(conf == before, s"session conf changed while the load ran: $conf")
+      assert(result == serialProbe, s"probe gave $result beside the load, $serialProbe alone")
+    }
+    // every SQL job carries shuffle.partitions (the session sets it), so an
+    // empty list would mean the job properties were not recorded
+    val ran = jobs.jobs.flatMap(j => keys.flatMap(k => j.sqlConf.get(k).map(k -> _)))
+    assert(ran.exists(_._1 == "spark.sql.shuffle.partitions"), s"no job recorded its conf: $jobs")
+    ran.foreach { case (k, v) =>
+      assert(v == before(k), s"a job ran with $k=$v, the session has ${before(k)}")
+    }
+    Seq("auction_status_dim", "reserve_status_dim", "body_style_dim", "seller_type_dim",
+      "drivetrain_dim", "transmission_dim", "city_dim", "vehicle_make_dim",
+      "vehicle_model_dim", "vehicle_dim", "auction_fact", "staging").foreach { t =>
+      def rows(wh: Warehouse) = wh.read(t).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      assert(rows(whConc) == rows(whSerial), s"$t differs from the serial load")
+    }
   }
 
   test("J1 disjunctive rewrite ≡ OR-join on the state lookup") {
