@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.etl.{Flatten, MergeWrite, Silver, Validate}
 import graft.star.{StarLoad, Warehouse}
@@ -17,14 +16,7 @@ import graft.stream.Incremental
 object AuctionPipelineDemo {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("auction-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val work = if (args.length > 1) args(1)
       else Files.createTempDirectory("graft_demo").toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.SuffixArray
 
@@ -27,15 +26,7 @@ object AuditCost {
     val dirArgs = if (repsOpt.isDefined) args.drop(1).toSeq else args.toSeq
     val dirs = if (dirArgs.nonEmpty) dirArgs
       else Seq("/root/testdata/sf0.1", "/root/repo/scale/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val cutoff = 5000L // the sf0.1 id space — present in every corpus
     for (dir <- dirs) {

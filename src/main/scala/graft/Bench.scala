@@ -1,41 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 object Bench {
+  /** One timed attempt of a query: wall seconds, the error message when it
+    * threw, and its gc, process-cpu and jit seconds and machine steal %. */
+  private[graft] final case class Attempt(wall: Double, err: Option[String],
+      gc: Double, cpu: Double, steal: Double, jit: Double)
+
+  /** A query's record: the reported attempt (wall −1 when none succeeded),
+    * the first attempt's error when none succeeded, code-cache MB in use at
+    * query end, every attempt in order, and whether the reported min came
+    * from the contended fallback. */
+  private[graft] final case class Run(name: String, best: Attempt,
+      err: Option[String], codeCacheMb: Double, attempts: Seq[Attempt],
+      contended: Boolean)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // NOTE (r19): a session-wide cut of AQE's 1 MB coalesce floor
-      // (minPartitionSize=16k) was A/B-measured and REJECTED: it
-      // parallelized the CPU-dense demux stages (q214 2.5->1.4 s) but
-      // cost the action-latency-bound composed loads more than it saved
-      // (q44 5.9->7.9 s, q198 4.6->6.0 s — more tasks and more output
-      // files per driver action). Demux parallelism comes from explicit
-      // user-specified repartitions in the blob builders instead
-      // (WebQueries.groupedBlobs), which AQE never coalesces; the floor
-      // stays at the default that the load tier prefers. Env override
-      // kept for future A/B runs.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
-      // NOTE (r19): KryoSerializer for the RDD tier (CC/BFS/PageRank
-      // loops) was A/B-measured and REJECTED: -0.2 s net over ten
-      // loop-bound queries, inside noise — local-mode shuffles of these
-      // small Tuple2 frames are not serialization-bound (on a real
-      // cluster with network shuffles Kryo stays the right default; the
-      // measurement only rejects it as a BENCH win).
-      .config("spark.ui.enabled", "false")
-      // static conf, must be set before the session exists: the default
-      // 100-entry generated-class cache thrashes on a 100+-query run (a
-      // single composed load emits >100 codegen units, so even its OWN
-      // second attempt recompiled everything — Janino time, not query time)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // untimed warmup: session/codegen/JIT bootstrap is not query cost —
     // without it the first query absorbs ~5s of one-time initialization
     try {
@@ -77,11 +59,7 @@ object Bench {
     // tiered-JIT seeding and page-cache priming all land before the clock
     // starts. Costs one extra execution per query — untimed, and partly
     // repaid because the adaptive re-attempt rule fires far less often when
-    // attempt 1 is already steady-state. SPARK_GRAFT_WARM_DIR still
-    // overrides for A/B runs; SPARK_GRAFT_NO_WARMUP disables.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
-    val doWarm = !sys.env.contains("SPARK_GRAFT_NO_WARMUP") &&
-      new java.io.File(warmDir).isDirectory
+    // attempt 1 is already steady-state.
     // UNTIMED inter-query hygiene, so query N's cost never bleeds into
     // query N+1's number (the cross-query contamination that made one
     // composed load 2× slower at position 50 of a full run than isolated):
@@ -141,20 +119,18 @@ object Bench {
         (if (nums.length > 7) nums(7) else -1L, nums.sum)
       } catch { case _: Throwable => (-1L, -1L) }
       // attempt 0: one untimed pass of the plan the timed attempts will run
-      // (see doWarm above); its debris is cleared by the attempt-1 quiesce
-      if (doWarm) {
-        spark.sparkContext.setJobDescription(s"$name#warmup")
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-      def runAttempt(attempt: Int) = {
+      // (see the warmup note above); its debris is cleared by the attempt-1
+      // quiesce
+      spark.sparkContext.setJobDescription(s"$name#warmup")
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+      def runAttempt(attempt: Int): Attempt = {
         // quiesce on QUERY boundaries only (attempt 1): that is where the
         // contamination vector lives — attempt 2 then measures steady
-        // state, because the A/B (SPARK_GRAFT_NO_QUIESCE, driver never
-        // sets it) showed the gc's concurrent aftershocks + async block
-        // removals land inside the next timed region (~15% on composed
-        // loads on an unpressured box)
-        if (attempt == 1 && !sys.env.contains("SPARK_GRAFT_NO_QUIESCE")) quiesce()
+        // state, because an earlier A/B showed the gc's concurrent
+        // aftershocks + async block removals land inside the next timed
+        // region (~15% on composed loads on an unpressured box)
+        if (attempt == 1) quiesce()
         // attribute every job of this attempt in the Spark event log / UI —
         // post-hoc per-query stage forensics (the r8 full-run-only CPU
         // blowups were only diagnosable by diffing a query's stage metrics
@@ -176,26 +152,25 @@ object Bench {
         val jit = if (j0 < 0) -1.0 else (jitMillis - j0) / 1e3
         val (s1, k1) = cpuTicks
         val steal = if (s0 < 0 || k1 <= k0) -1.0 else 100.0 * (s1 - s0) / (k1 - k0)
-        (wall, err, (gcMillis - g0) / 1e3, cpu, steal, jit)
+        Attempt(wall, err, (gcMillis - g0) / 1e3, cpu, steal, jit)
       }
       // adaptive attempts (r9, VERDICT #2b): min-of-2 is blind when BOTH
       // attempts sit inside a compile/contention storm — keep re-running
       // while the newest attempt improves the min-so-far by >20%, cap 4,
       // so one bad epoch can never be the reported floor. Errors stop the
       // loop after the second attempt exactly as min-of-2 did.
-      val attempts = scala.collection.mutable.ArrayBuffer.empty[
-        (Double, Option[String], Double, Double, Double, Double)]
+      val attempts = scala.collection.mutable.ArrayBuffer.empty[Attempt]
       var go = true
       while (go && attempts.length < 4) {
         val a = runAttempt(attempts.length + 1)
         attempts += a
-        val walls = attempts.collect { case (t, None, _, _, _, _) => t }
+        val walls = attempts.filter(_.err.isEmpty).map(_.wall)
         go = if (attempts.length < 2) true
-             else if (a._2.isDefined || walls.length < 2) false
+             else if (a.err.isDefined || walls.length < 2) false
              else walls.last < 0.8 * walls.dropRight(1).min
       }
       val ccMb = codeCacheMb
-      val ok = attempts.collect { case (t, None, g, c, s, j) => (t, g, c, s, j) }
+      val ok = attempts.filter(_.err.isEmpty)
       // steal-aware min (r15 verdict #4): two rounds of steal-poisoned
       // epochs showed "wait for a quiet box" is not a strategy. Prefer the
       // min over attempts that ran at < 1% machine steal; only when NO
@@ -205,7 +180,7 @@ object Bench {
       // attempts stay eligible only for the fallback. Attempt counts,
       // warmup and the adaptive re-run rule are unchanged (the harness
       // stays comparable round-over-round).
-      val clean = ok.filter(a => a._4 >= 0 && a._4 < 1.0)
+      val clean = ok.filter(a => a.steal >= 0 && a.steal < 1.0)
       // r17 verdict nit: the <1% threshold is binary, so a barely-clean
       // SLOW attempt (e.g. q166's 7.06 s at 0.50% steal, with a 2.27 s
       // attempt at 1.39% in the same run) could masquerade as a
@@ -213,64 +188,25 @@ object Bench {
       // clean label is doing more harm than the steal it guards against:
       // report the global min and flag `contended` so the number is
       // visibly not like-for-like.
-      val cleanBest = if (clean.nonEmpty) Some(clean.minBy(_._1)) else None
-      val globalBest = if (ok.nonEmpty) Some(ok.minBy(_._1)) else None
+      val cleanBest = clean.minByOption(_.wall)
+      val globalBest = ok.minByOption(_.wall)
       val best = (cleanBest, globalBest) match {
-        case (Some(c), Some(g)) if c._1 > 2.0 * g._1 => g
+        case (Some(c), Some(g)) if c.wall > 2.0 * g.wall => g
         case (Some(c), _) => c
         case (_, Some(g)) => g
-        case _ => (-1.0, 0.0, -1.0, -1.0, -1.0)
+        case _ => Attempt(-1.0, None, 0.0, -1.0, -1.0, -1.0)
       }
       val contended = ok.nonEmpty &&
-        ((clean.isEmpty && ok.exists(_._4 >= 1.0)) ||
-          cleanBest.exists(c => globalBest.exists(g => c._1 > 2.0 * g._1)))
+        ((clean.isEmpty && ok.exists(_.steal >= 1.0)) ||
+          cleanBest.exists(c => globalBest.exists(g => c.wall > 2.0 * g.wall)))
       // every attempt's wall + jit + steal ride along (ADVICE r9: the
       // variable-N min must be auditable — a reader can see how many
       // attempts ran, which one the reported floor came from, and whether
-      // the clean-steal rule or the fallback picked it; errored attempts
-      // log wall −1 but keep their real steal)
-      (name, best._1, if (ok.isEmpty) attempts.head._2 else None,
-        best._2, best._3, best._4, best._5, ccMb,
-        attempts.map(a => if (a._2.isDefined) -1.0 else a._1).toSeq,
-        attempts.map(_._6).toSeq,
-        attempts.map(_._5).toSeq, contended)
+      // the clean-steal rule or the fallback picked it)
+      Run(name, best, if (ok.isEmpty) attempts.head.err else None, ccMb,
+        attempts.toSeq, contended)
     }
-    val qs = runs.map { case r => s"\"" + r._1 + "\":" + (if (r._3.isDefined) -1.0 else r._2) }
-      .mkString("{", ",", "}")
-    // every control char (not just \n\r\t) must be mapped out or the JSON
-    // line is unparseable
-    def jstr(s: String) = "\"" + s.replaceAll("[\\x00-\\x1f\\\\\"]", " ") + "\""
-    val errs = runs.collect { case r if r._3.isDefined =>
-      s"\"" + r._1 + "\":" + jstr(r._3.get) }.mkString("{", ",", "}")
-    def r3(x: Double) = math.round(x * 1000) / 1000.0
-    // per-query diagnostics for the reported (min) attempt, rounded to
-    // avoid double-noise in the line: gc seconds, process cpu seconds,
-    // machine steal share, jit compile seconds, and code-cache MB in use at
-    // query end — wall up with cpu flat + steal up = co-tenant contention;
-    // cpu up with gc/steal flat + codecache at the ceiling = code-cache
-    // flushing (see build.sbt's ReservedCodeCacheSize note)
-    type RunRow = (String, Double, Option[String], Double, Double, Double,
-      Double, Double, Seq[Double], Seq[Double], Seq[Double], Boolean)
-    def jmap(f: RunRow => Double) =
-      runs.map(r => s"\"" + r._1 + "\":" + r3(f(r))).mkString("{", ",", "}")
-    // per-attempt arrays: the audit trail for the adaptive-attempt rule
-    def jarr(f: RunRow => Seq[Double]) =
-      runs.map(r => "\"" + r._1 + "\":" + f(r).map(r3).mkString("[", ",", "]"))
-        .mkString("{", ",", "}")
-    val gcs = jmap(_._4)
-    val cpus_ = jmap(_._5)
-    val steals = jmap(_._6)
-    val jits = jmap(_._7)
-    val ccs = jmap(_._8)
-    val aWalls = jarr(_._9)
-    val aJits = jarr(_._10)
-    val aSteals = jarr(_._11)
-    // only the queries whose reported min came from the contended fallback
-    // (no attempt under 1% steal) — empty object on a clean run
-    val contendedMap = runs.collect { case r if r._12 =>
-      "\"" + r._1 + "\":true" }.mkString("{", ",", "}")
-    val total = runs.collect { case r if r._3.isEmpty => r._2 }.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"gc":$gcs,"cpu":$cpus_,"steal_pct":$steals,"jit":$jits,"codecache_mb":$ccs,"attempt_walls":$aWalls,"attempt_jits":$aJits,"attempt_steals":$aSteals,"contended":$contendedMap,"sf":"$sfDir"}"""
+    val line = json(runs, sfDir)
     println(line)
     // the stdout line is >4 KB at 100+ queries and output-capture windows
     // truncate it — ALSO dump the same JSON whole to a file (overridable;
@@ -280,5 +216,48 @@ object Bench {
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: Throwable => () }
     spark.stop()
+  }
+
+  /** The bench record as one JSON line, `"metric"` first (tools grep for
+    * `{"metric"`). Per query: the reported wall (−1 on error), the error,
+    * and for the reported attempt gc seconds, process cpu seconds, machine
+    * steal share, jit compile seconds and code-cache MB in use at query end
+    * — wall up with cpu flat + steal up = co-tenant contention; cpu up with
+    * gc/steal flat + codecache at the ceiling = code-cache flushing (see
+    * build.sbt's ReservedCodeCacheSize note). The per-attempt arrays are the
+    * audit trail of the adaptive-attempt rule; `contended` lists only the
+    * queries whose reported min came from the contended fallback. Telemetry
+    * is rounded to 3 decimals to keep double noise out of the line. */
+  private[graft] def json(runs: Seq[Run], sfDir: String): String = {
+    val nodes = JsonNodeFactory.instance
+    def r3(x: Double) = nodes.numberNode(math.round(x * 1000) / 1000.0)
+    val line = nodes.objectNode()
+    def byQuery(key: String, rs: Seq[Run])(value: Run => JsonNode): Unit = {
+      val o = line.putObject(key)
+      rs.foreach(r => o.set[JsonNode](r.name, value(r)))
+    }
+    def perAttempt(key: String)(value: Attempt => Double): Unit =
+      byQuery(key, runs) { r =>
+        val a = nodes.arrayNode()
+        r.attempts.foreach(x => a.add(r3(value(x))))
+        a
+      }
+    line.put("metric", "total")
+    line.put("value", runs.filter(_.err.isEmpty).map(_.best.wall).sum)
+    line.put("unit", "sec")
+    byQuery("queries", runs)(r => nodes.numberNode(r.best.wall))
+    byQuery("errors", runs.filter(_.err.isDefined))(r => nodes.textNode(r.err.get))
+    byQuery("gc", runs)(r => r3(r.best.gc))
+    byQuery("cpu", runs)(r => r3(r.best.cpu))
+    byQuery("steal_pct", runs)(r => r3(r.best.steal))
+    byQuery("jit", runs)(r => r3(r.best.jit))
+    byQuery("codecache_mb", runs)(r => r3(r.codeCacheMb))
+    // errored attempts log wall −1 but keep their real jit and steal
+    perAttempt("attempt_walls")(a => if (a.err.isDefined) -1.0 else a.wall)
+    perAttempt("attempt_jits")(_.jit)
+    perAttempt("attempt_steals")(_.steal)
+    byQuery("contended", runs.filter(_.contended))(_ => nodes.booleanNode(true))
+    line.put("sf", sfDir)
+    new ObjectMapper().writeValueAsString(line)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection: prints the formatted physical plan of selected queries
   * (usage: runMain graft.Explain [sfDir] [query ...]; default: headliners).
   */
@@ -13,15 +11,7 @@ object Explain {
         "q21_minhash_signature", "q26_embedding_neardup", "q64_cube",
         "q65_moving_stats", "q55_decontaminate", "q90_cross_corpus",
         "q92_mv_refresh", "q95_anomaly_flags", "q218_crawl_curation")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     names.foreach { n =>
       println(s"==================== $n ====================")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB oracle compare. The names of the
   * queries that threw go to failed.txt (one a line, empty when none), and
@@ -9,16 +10,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // optional comma-separated query filter for local iteration (same
     // convention as Bench); the driver never sets it
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -27,27 +19,19 @@ object Verify {
     val failed = dump(spark, sfDir, outDir,
       SparkEntry.queries.toSeq.filter { case (n, _) => only.forall(_.contains(n)) },
       nThreads)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.length} queries failed: ${failed.mkString(", ")}")
       sys.exit(1)
     }
   }
+
+  /** The query → oracle SQL map as one JSON object. Jackson escapes the
+    * quotes, backslashes and control chars (tabs, CRs) of builder-authored
+    * SQL, which would otherwise break the oracle's `json.load`. */
+  private[graft] def oracleJson(sql: Map[String, String]): String =
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(sql.asJava)
 
   /** Writes each query's result to `outDir/<name>` and the sorted names of
     * the queries that threw to `outDir/failed.txt`; returns those names.

@@ -1034,7 +1034,6 @@ object Dedup {
   def duplicateClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     // symmetric edge list, materialized ONCE (localCheckpoint + the sizing
     // count below) — rounds read executor-local blocks, never the detector
     val sym = pairs
@@ -1082,7 +1081,6 @@ object Dedup {
     var changed = 1L
     var firstChanged = -1L
     while (changed > 0) {
-      val t0 = System.nanoTime()
       val acc = spark.sparkContext.longAccumulator
       // double-propagation is the latency optimum while labels are moving in
       // bulk (NOTES r7); once the per-round delta collapses to a sliver of
@@ -1098,17 +1096,18 @@ object Dedup {
       val next = jump(stepped)
       next.localCheckpoint() // truncate lineage at materialization
       next.count() // the round's ONE action; also settles the accumulator
+      // round 1's action ran the shuffle that builds `edges` from `sym` and
+      // cached `edges`: nothing reads `sym` again, so drop that second
+      // cached copy of the edge list now (not earlier — until that shuffle
+      // has run, `edges` still needs `sym`'s blocks)
+      if (round == 0) sym.unpersist(blocking = false)
       changed = acc.value
       if (firstChanged < 0) firstChanged = changed
       labels.unpersist(blocking = false)
       labels = next
       round += 1
-      if (debug) println(f"[cc] round $round changed=$changed " +
-        f"props=${if (tail) 1 else 2} " +
-        f"${(System.nanoTime() - t0) / 1e9}%.3fs parts=${next.getNumPartitions}")
     }
     edges.unpersist(blocking = false) // labels' lineage is checkpoint-truncated
-    sym.unpersist(blocking = false)
     labels.toDF("vec_id", "label")
       .withColumn("cluster_size",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("label"))))

@@ -1209,11 +1209,12 @@ object WebQueries {
     val n = ds.sparkSession.sparkContext.defaultParallelism
     // INVARIANT (ADVICE r19): the head column IS the value `id` extracts —
     // both extension methods pass tuple._1 and the datasets are tuples whose
-    // first column is that Long. The repartition key (SQL `div`) and the
-    // run splitter (Scala `/`) must also agree, which they only provably do
-    // for non-negative ids — assert both so a future caller that breaks
-    // either invariant fails loudly instead of silently splitting groups
-    // across partitions and emitting duplicate partial groups.
+    // first column is that Long; assert it so a future caller that breaks it
+    // fails loudly instead of silently splitting groups across partitions
+    // and emitting duplicate partial groups. The repartition key (SQL `div`)
+    // and the run splitter (Scala `/`) agree for every id, negative ones
+    // included: both truncate toward zero, and the quotient never decreases
+    // as the id grows, so each group's rows are one run after the sort.
     val idCol = ds.columns.head // the Long group-id component
     require(ds.schema.head.dataType == org.apache.spark.sql.types.LongType,
       s"groupRuns: head column `$idCol` must be the LongType group id " +
@@ -1225,10 +1226,7 @@ object WebQueries {
         new Iterator[R] {
           def hasNext: Boolean = buf.hasNext
           def next(): R = {
-            val h = id(buf.head)
-            require(h >= 0, s"groupRuns: negative group-id component $h — " +
-              "SQL div partitioning and Scala / run-splitting diverge there")
-            val g = h / groupSize
+            val g = id(buf.head) / groupSize
             val arr = scala.collection.mutable.ArrayBuffer.empty[T]
             while (buf.hasNext && id(buf.head) / groupSize == g)
               arr += buf.next()

@@ -2,17 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole test JVM (forked by sbt). */
+/** One shared session for the whole test JVM (forked by sbt): the mains'
+  * conf on a fixed `local[4]`, with a temporary warehouse dir. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_tests").toString)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4, Map("spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("graft_wh_tests").toString))
 }

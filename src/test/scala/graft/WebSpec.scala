@@ -573,4 +573,17 @@ class WebSpec extends AnyFunSuite {
     // U = 3 of 4 concordant -> 7500
     assert(auc(Seq((4L, 1), (2L, 1), (3L, 0), (1L, 0))) == 7500L)
   }
+
+  test("groupedBlobs emits every group once, negative ids included: SQL " +
+    "div and Scala / both truncate toward zero") {
+    import graft.queries.WebQueries._
+    val ids = -20L to 20L
+    val got = ids.map(i => (i, s"m$i")).toDS().repartition(4)
+      .groupedBlobs(8L) { (g, it) => (g, it.map(_._1).sorted.toSeq) }
+      .collect().toSeq
+    assert(got.map(_._1).distinct.size == got.size, s"a group split: $got")
+    val want = ids.groupBy(_ / 8L).map { case (g, m) => (g, m.sorted) }
+    assert(got.sortBy(_._1) == want.toSeq.sortBy(_._1))
+    assert(got.find(_._1 == 0L).get._2 == (-7L to 7L))
+  }
 }

@@ -10,7 +10,9 @@ maps share the same key set, the regex dedups via a set) and fails if:
     differs from the source-derived count;
   * COVERAGE.md lacks a row mentioning some query name;
   * a test-count claim ("N ScalaTest" / "N tests") in README/NOTES differs
-    from the count passed via --tests (the number sbt prints; omit to skip).
+    from the count passed via --tests (the number sbt prints; omit to skip);
+  * README.md or the verify SKILL names a `runMain graft.X` for which
+    src/main has no `object X` with a `main` (a deleted tool still named).
 
 Run from the repo root as the LAST step before the end-of-round docs
 commit:  python3 tools/check_docs.py [--tests 302]
@@ -26,9 +28,18 @@ def main() -> int:
         tests = int(sys.argv[sys.argv.index("--tests") + 1])
 
     names = set()
+    mains = set()
     for f in glob.glob("src/main/scala/graft/**/*.scala", recursive=True):
         with open(f, encoding="utf-8") as fh:
-            names |= set(re.findall(r'"(q\d+_[a-z0-9_]+)"\s*->', fh.read()))
+            src = fh.read()
+        names |= set(re.findall(r'"(q\d+_[a-z0-9_]+)"\s*->', src))
+        pkg = re.search(r"^package\s+([\w.]+)", src, re.M)
+        # each top-level object runs to the next one; it is a main when its
+        # body defines `def main(`
+        for chunk in re.split(r"^(?=object\s)", src, flags=re.M)[1:]:
+            obj = re.match(r"object\s+(\w+)", chunk).group(1)
+            if re.search(r"\bdef\s+main\s*\(", chunk):
+                mains.add(f"{pkg.group(1)}.{obj}" if pkg else obj)
     n = len(names)
     errs = []
     if n == 0:
@@ -55,6 +66,19 @@ def main() -> int:
                 if int(m.group(1)) != tests:
                     errs.append(f"{path}: says '{m.group(0)}' but sbt "
                                 f"reports {tests}")
+
+    skill = ".claude/skills/verify/SKILL.md"
+    for path in ("README.md", skill):
+        try:
+            with open(path, encoding="utf-8") as fh:
+                text = fh.read()
+        except OSError as e:
+            errs.append(f"{path}: unreadable ({e})")
+            continue
+        for m in sorted(set(re.findall(r"runMain\s+(graft(?:\.\w+)+)", text))):
+            if m not in mains:
+                errs.append(f"{path}: names 'runMain {m}' but src/main has "
+                            f"no object {m.rsplit('.', 1)[1]} with a main")
 
     # COVERAGE.md cites queries in the short "oracle: qNN" form — require
     # each query's qNN token (word-bounded so q10 does not match q100)
