@@ -242,7 +242,7 @@ object Sampling {
     // cannot strip it the way it strips lit(1)) is semantically identical
     // to an empty spec (one global group) but keeps the WindowExec keyed —
     // no "No Partition Defined" warning in every load's logs, and the
-    // AuditWindows main stays clean.
+    // QueriesSpec window audit stays clean.
     val whole = org.apache.spark.sql.expressions.Window
       .partitionBy(substring(col(srcCol), 0, 0))
       .rowsBetween(Long.MinValue, Long.MaxValue)

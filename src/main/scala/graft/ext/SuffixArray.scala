@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one corpus-scale range-partitioned sort (the thing a
   * suffix array IS), per-partition windows only ([[globalRowNumber]] —
-  * zero unpartitioned windows, the AuditWindows invariant), one equi-join
+  * zero unpartitioned windows, the QueriesSpec window invariant), one equi-join
   * on the dense rank for adjacency, and the LCP codegen kernel
   * ([[graft.functions.LcpPrefix]]) per adjacent pair.
   */

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL registration for the engine's custom expressions, so `spark.sql`
-  * users get them too: either per-session via [[GraftFunctions.register]] or
-  * at build time via `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * users get them too. [[GraftExtensions]] injects them into every session
+  * `graft.Session` builds; a session built elsewhere gets them with
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   *
   * Kernels whose extra arguments are plan-time CONSTANTS (shingle widths,
   * Hilbert bits, stopword lists) are registered with foldable-literal
@@ -72,11 +73,6 @@ object GraftFunctions {
     (FunctionIdentifier("graft_text_dhash"),
       new ExpressionInfo(classOf[TextDHash].getName, "graft_text_dhash"),
       (exprs: Seq[Expression]) => TextDHash(exprs(0))))
-
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }
 
 /** `SparkSessionExtensions` hook (SURVEY.md §4 custom-hook tier): SQL

@@ -152,8 +152,6 @@ object StarLoadQueries {
 
   /** Every fact row joined back to its dim keys — the hash surface shared by
     * q44 (fresh load) and q49 (incremental). */
-  private[graft] def readBackFor(wh: Warehouse): DataFrame = readBack(wh)
-
   private def readBack(wh: Warehouse): DataFrame = {
     val asd = wh.read("auction_status_dim")
       .select(col("id").as("_aid"), col("status").as("status_key"))

@@ -53,6 +53,7 @@ object Facts {
   /** U2 (Q:158-177): upsert on (vin, auction_id) — incoming wins on all
     * attributes, the existing row keeps its vehicle_id (Postgres ON CONFLICT
     * DO UPDATE preserves the PK). New rows get max(existing)+row_number.
+    * [[StarLoad.run]] applies it as this merge + [[writeVehicleDim]].
     *
     * Scale shape: the dim is hash-bucketed by key on disk; only buckets
     * containing incoming keys are read (a static partition filter) and
@@ -60,13 +61,9 @@ object Facts {
     * `maxId` scalar agg scans one column of the full dim (column-pruned);
     * fresh-key id assignment is a range-shuffled sort + `zipWithIndex`
     * (see [[assignFreshIds]]) — parallel even when the fresh set is the
-    * whole fact table (initial bulk load). */
-  def upsertVehicleDim(wh: Warehouse, staging: DataFrame): Unit = {
-    val (merged, prevMax) = mergedVehicleDim(wh, staging)
-    writeVehicleDim(wh, merged, prevMax)
-  }
-
-  /** Builds (and checkpoints) the merged rows of the AFFECTED buckets —
+    * whole fact table (initial bulk load).
+    *
+    * Builds (and checkpoints) the merged rows of the AFFECTED buckets —
     * every incoming (vin, auction_id) key's final row with its final
     * vehicle_id. The fact load only ever resolves keys it is currently
     * staging, and those are all in the affected buckets, so this frame is a

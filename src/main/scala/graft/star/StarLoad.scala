@@ -61,7 +61,7 @@ object StarLoad {
       Dims.loadCompoundDimsFused(wh, staging)
       // the staging TABLE dump (U3 semantics) overlaps the vehicle+fact
       // tail; every load step reads the cached frame, never the table
-      val stagingWrite = Future(wh.truncateInsert("staging", staging))
+      val stagingWrite = Future(wh.overwrite("staging", staging))
       // the fact's vehicle resolution consumes the merged in-memory frame
       // (sufficient for all currently-staged keys — see
       // Facts.mergedVehicleDim) while the bucket write streams to disk

@@ -178,6 +178,4 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
       .parquet(path(table).toString)
     invalidate(table)
   }
-
-  def truncateInsert(table: String, df: DataFrame): Unit = overwrite(table, df)
 }

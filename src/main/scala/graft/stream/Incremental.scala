@@ -1,7 +1,6 @@
 package graft.stream
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
 import graft.etl.{Flatten, MergeWrite, Silver, Validate}
 import graft.star.{StarLoad, Warehouse}
 
@@ -27,22 +26,15 @@ object Incremental {
     val raw = spark.readStream
       .option("wholetext", "true")
       .text(rawDir)
-    val q = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          // Flatten expects the wholetext frame shape (one row per file).
-          val bronze = Flatten.normalizeNames(Flatten.flatten(
-            Flatten.parseEnvelopes(batch.select($"value"))))
-          val silver = Silver.run(bronze)
-          MergeWrite.mergeWrite(spark, processedDir, silver)
-          warehouseDir.foreach { wd =>
-            StarLoad.run(new Warehouse(spark, wd), silver)
-          }
-        }
+    FileStream.foreachBatch(raw, checkpointDir = Some(checkpointDir)) { (batch, _) =>
+      // Flatten expects the wholetext frame shape (one row per file).
+      val bronze = Flatten.normalizeNames(Flatten.flatten(
+        Flatten.parseEnvelopes(batch.select($"value"))))
+      val silver = Silver.run(bronze)
+      MergeWrite.mergeWrite(spark, processedDir, silver)
+      warehouseDir.foreach { wd =>
+        StarLoad.run(new Warehouse(spark, wd), silver)
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 }

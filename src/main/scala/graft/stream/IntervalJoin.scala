@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-stream event-time interval join — the attribution primitive
   * (purchase joined to the same user's views in the preceding window) as a
@@ -18,17 +17,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object IntervalJoin {
 
-  private def eventStream(spark: SparkSession, eventsParquet: String,
-                          maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val schema = spark.read.parquet(eventsParquet).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(eventsParquet)
-    if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else raw.withColumn("ts", col("ts").cast("timestamp"))
-  }
-
   /** Purchases attributed to the same user's views within the preceding
     * `windowMinutes`: one output row per (view, purchase) pair with
     * view_ts < purchase_ts ≤ view_ts + window. Both sides watermarked
@@ -37,7 +25,7 @@ object IntervalJoin {
   def attributedPurchases(spark: SparkSession, eventsParquet: String,
                           windowMinutes: Int, watermark: String = "10 minutes",
                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val ev = eventStream(spark, eventsParquet, maxFilesPerTrigger)
+    val ev = FileStream.events(spark, eventsParquet, maxFilesPerTrigger)
     val views = ev.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("view_ts"),
         col("event_id").as("view_id"))
@@ -75,16 +63,7 @@ object IntervalJoin {
     * once) into a memory sink and return the snapshot. */
   def runToSnapshot(spark: SparkSession, eventsParquet: String,
                     queryName: String, windowMinutes: Int,
-                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val q = attributedPurchases(spark, eventsParquet, windowMinutes,
-        maxFilesPerTrigger = maxFilesPerTrigger)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+                    maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    FileStream.toMemory(attributedPurchases(spark, eventsParquet, windowMinutes,
+      maxFilesPerTrigger = maxFilesPerTrigger), queryName, "append")
 }

@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.ext.Mv
 
@@ -37,18 +36,10 @@ object MvStream {
                       partial: DataFrame => DataFrame,
                       maxFilesPerTrigger: Option[Int] = None,
                       merge: Option[(DataFrame, DataFrame) => DataFrame] = None): Unit = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val q = reader.parquet(factsDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          applyBatch(spark, viewDir, partial(batch), keys, batchId, merge)
-      }
-      .start()
-    q.awaitTermination()
+    FileStream.foreachBatch(FileStream.parquet(spark, factsDir, schema, maxFilesPerTrigger),
+        checkpointDir = Some(checkpointDir)) { (batch, batchId) =>
+      applyBatch(spark, viewDir, partial(batch), keys, batchId, merge)
+    }
   }
 
   /** Fold one batch partial into the view; a batch id at or below the

@@ -3,7 +3,7 @@ package graft.stream
 import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Stateful-streaming per-user running totals via `flatMapGroupsWithState`
   * — the incremental twin of the batch time-series features (q65,
@@ -60,20 +60,10 @@ object RunningTotals {
                     queryName: String = "running_totals",
                     maxFilesPerTrigger: Option[Int] = None): Dataset[Out] = {
     import spark.implicits._
-    val schema = spark.read.parquet(eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(eventsDir)
-    val events =
-      (if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)").cast("timestamp"))
-      else raw.withColumn("ts", col("ts").cast("timestamp")))
-        .select(col("event_id"), col("user_id"), col("ts"), col("value")).as[Ev]
-    val q = events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
-      .writeStream.outputMode("append").format("memory")
-      .queryName(queryName).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(queryName).as[Out]
+    val events = FileStream.events(spark, eventsDir, maxFilesPerTrigger)
+      .select(col("event_id"), col("user_id"), col("ts"), col("value")).as[Ev]
+    FileStream.toMemory(events.groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step),
+      queryName, "append").as[Out]
   }
 }

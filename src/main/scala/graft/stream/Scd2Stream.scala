@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.ext.Scd
 
@@ -30,21 +29,12 @@ object Scd2Stream {
                       checkpointDir: String, keyCol: String,
                       attrCols: Seq[String],
                       maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val q = reader.parquet(updatesDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val merged = Scd.scd2Merge(readState(spark, stateDir, batch, keyCol, attrCols),
-            batch, keyCol, attrCols, batchId + 1)
-          publish(spark, stateDir, merged)
-        }
-      }
-      .start()
-    q.awaitTermination()
+    FileStream.foreachBatch(FileStream.parquet(spark, updatesDir, schema, maxFilesPerTrigger),
+        checkpointDir = Some(checkpointDir)) { (batch, batchId) =>
+      val merged = Scd.scd2Merge(readState(spark, stateDir, batch, keyCol, attrCols),
+        batch, keyCol, attrCols, batchId + 1)
+      publish(spark, stateDir, merged)
+    }
   }
 
   /** Current state, or an empty zero-version state derived from the batch

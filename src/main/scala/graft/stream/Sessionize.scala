@@ -3,7 +3,7 @@ package graft.stream
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.star.Warehouse
 
 /** Stateful-streaming sessionization via `flatMapGroupsWithState` — the
@@ -209,16 +209,10 @@ object Sessionize {
                             watermarkDelay: String,
                             maxFilesPerTrigger: Option[Int]): Dataset[Session] = {
     import spark.implicits._
-    val schema = spark.read.parquet(eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(eventsDir)
-    val events =
-      (if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw).selectExpr("user_id", "CAST(ts AS TIMESTAMP) AS ts")
-        .withWatermark("ts", watermarkDelay)
-        .as[Ev]
+    val events = FileStream.events(spark, eventsDir, maxFilesPerTrigger)
+      .select(col("user_id"), col("ts"))
+      .withWatermark("ts", watermarkDelay)
+      .as[Ev]
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
   }
@@ -238,13 +232,10 @@ object Sessionize {
                      watermarkDelay: String = "30 days",
                      maxFilesPerTrigger: Option[Int] = None): Unit = {
     val sessions = sessionStream(spark, eventsDir, watermarkDelay, maxFilesPerTrigger)
-    val q = sessions.toDF().writeStream
+    FileStream.drain(sessions.toDF().writeStream
       .outputMode("update")
       .queryName(queryName)
-      .foreachBatch { (batch: DataFrame, _: Long) => upsertSessions(wh, table, batch) }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .foreachBatch { (batch: DataFrame, _: Long) => upsertSessions(wh, table, batch) })
   }
 
   /** [[runToWarehouse]] into a fresh temp warehouse, returning the final

@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.{Crawl, Warc}
 
 /** Streaming archive WRITE — the arrival-time twin of the q243 capstone:
@@ -49,47 +48,32 @@ object StreamingArchiveWrite {
              queryName: String = "stream_archive_write",
              maxFilesPerTrigger: Option[Int] = None): Int = {
     import spark.implicits._
-    val schema = spark.read.parquet(blobsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n)).parquet(blobsDir)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = raw.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", s"$releaseDir/_graft_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          batches.incrementAndGet()
-          val blobs = batch
-            .selectExpr("CAST(blob_id AS BIGINT) AS blob_id", "warc")
-            .as[(Long, Array[Byte])]
-          val curated = Crawl.extract(blobs)
-            .filter(col("kept_chars") * 2 >= col("total_chars"))
-            .select(col("doc_id"), col("extracted"))
-            .as[(Long, String)]
-          // pack 8 records per release blob WITHIN the batch; blob ids
-          // are batch-local (made globally unique with the batch id)
-          val written = curated.groupByKey(_._1 / 8).mapGroups { (g, it) =>
-            val ms = it.toArray.sortBy(_._1)
-            val entries = ms.toSeq.map { case (id, ex) =>
-              Warc.Entry("response", Some(s"https://example.org/doc/$id"),
-                "application/http; msgtype=response",
-                Warc.httpResponse("200 OK", ex))
-            }
-            val (blob, extents) = Warc.synthesizeGzMembers(entries)
-            ((batchId << 32) | (g & 0xffffffffL), blob,
-              extents.zipWithIndex.map { case ((off, len), ord) =>
-                (ord.toLong, off, len)
-              })
-          }.toDF("blob_key", "warc", "sidecar")
-          TxnSink.append(written, releaseDir, batchId)
+    FileStream.foreachBatch(FileStream.parquet(spark, blobsDir, maxFilesPerTrigger),
+        Some(queryName), Some(s"$releaseDir/_graft_checkpoint")) { (batch, batchId) =>
+      val blobs = batch
+        .selectExpr("CAST(blob_id AS BIGINT) AS blob_id", "warc")
+        .as[(Long, Array[Byte])]
+      val curated = Crawl.extract(blobs)
+        .filter(col("kept_chars") * 2 >= col("total_chars"))
+        .select(col("doc_id"), col("extracted"))
+        .as[(Long, String)]
+      // pack 8 records per release blob WITHIN the batch; blob ids
+      // are batch-local (made globally unique with the batch id)
+      val written = curated.groupByKey(_._1 / 8).mapGroups { (g, it) =>
+        val ms = it.toArray.sortBy(_._1)
+        val entries = ms.toSeq.map { case (id, ex) =>
+          Warc.Entry("response", Some(s"https://example.org/doc/$id"),
+            "application/http; msgtype=response",
+            Warc.httpResponse("200 OK", ex))
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
+        val (blob, extents) = Warc.synthesizeGzMembers(entries)
+        ((batchId << 32) | (g & 0xffffffffL), blob,
+          extents.zipWithIndex.map { case ((off, len), ord) =>
+            (ord.toLong, off, len)
+          })
+      }.toDF("blob_key", "warc", "sidecar")
+      TxnSink.append(written, releaseDir, batchId)
+    }
   }
 
   /** The committed release blobs + sidecars. */

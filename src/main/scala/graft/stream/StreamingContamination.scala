@@ -1,7 +1,6 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.SuffixArray
 
 /** Streaming contamination audit — the arrival-time twin of
@@ -42,39 +41,12 @@ object StreamingContamination {
                     queryName: String = "stream_contamination",
                     maxFilesPerTrigger: Option[Int] = None,
                     pruned: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(docsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n)).parquet(docsDir)
-    val sink = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    val q = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          // materialize the batch verdicts eagerly: foreachBatch frames are
-          // only valid within their micro-batch
-          val audit =
-            if (pruned) SuffixArray.auditShardPruned(index, batch, "doc_id",
-              "text", minLen, k)
-            else SuffixArray.auditShard(index, batch, "doc_id", "text",
-              minLen, k)
-          sink.add(audit.localCheckpoint(true))
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    sink.asScala.toSeq match {
-      case Seq() =>
-        // an all-empty arrival is a legitimate state (an upstream writer
-        // committed empty shards) — return the REPORT schema, not the
-        // schema-less emptyDataFrame, so filters/unions downstream resolve
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("doc_id", LongType), StructField("shared_len", LongType),
-            StructField("span", StringType), StructField("n_hits", LongType))))
-      case parts => parts.reduce(_ unionByName _)
+    def audit(shard: DataFrame): DataFrame =
+      if (pruned) SuffixArray.auditShardPruned(index, shard, "doc_id", "text", minLen, k)
+      else SuffixArray.auditShard(index, shard, "doc_id", "text", minLen, k)
+    val raw = FileStream.parquet(spark, docsDir, maxFilesPerTrigger)
+    FileStream.unionBatches(raw, audit(FileStream.emptyLike(raw)), Some(queryName)) {
+      (batch, _) => audit(batch)
     }
   }
 }

@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.TextOps
 
 /** Streaming exact dedup by content fingerprint — the streaming twin of
@@ -25,23 +24,12 @@ object StreamingDedup {
                     queryName: String = "stream_dedup",
                     watermarkDelay: String = "1 hour",
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(docsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(docsDir)
-    val deduped = raw
+    val deduped = FileStream.parquet(spark, docsDir, maxFilesPerTrigger)
       .withColumn("fingerprint", TextOps.fingerprintMd5(col("text")))
       .withColumn("_arrival", current_timestamp())
       .withWatermark("_arrival", watermarkDelay)
       .dropDuplicatesWithinWatermark("fingerprint")
       .drop("_arrival")
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    FileStream.toMemory(deduped, queryName, "append")
   }
 }

@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.Sketch
 
 /** Streaming HyperLogLog — the streaming twin of the batch cardinality
@@ -36,24 +35,14 @@ object StreamingHll {
                     groupCol: String, valueCol: String,
                     queryName: String = "stream_hll",
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(tableDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(tableDir)
-    val hashed = raw.select(
+    val hashed = FileStream.parquet(spark, tableDir, maxFilesPerTrigger).select(
       coalesce(col(groupCol).cast("string"), lit(Sketch.NullGroup)).as(groupCol),
       Sketch.hllHash(col(valueCol)).as("_h"))
     val regs = Sketch.hllRanked(hashed, groupCol)
       .groupBy(col(groupCol), col("_bucket"))
       .agg(max(col("_rho")).as("_rho"))
-    val q = regs.writeStream
-      .outputMode("complete") // bounded key space: state IS the sketch
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val snapshot = spark.table(queryName)
+    // complete mode: bounded key space, the state IS the sketch
+    val snapshot = FileStream.toMemory(regs, queryName, "complete")
       .select(col(groupCol), col("_bucket"), col("_rho"))
     val global = snapshot.groupBy(col("_bucket")).agg(max(col("_rho")).as("_rho"))
       .withColumn(groupCol, lit(Sketch.AllGroups))

@@ -1,7 +1,6 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.{Crawl, Warc}
 
 /** Streaming HOSTILE-BYTES crawl ingest — the arrival-time twin of the
@@ -32,44 +31,15 @@ object StreamingHostileCrawl {
   def runToSnapshot(spark: SparkSession, blobsDir: String,
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(blobsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n)).parquet(blobsDir)
-    val sink = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    val q = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val blobs = batch
-            .selectExpr("CAST(blob_id AS BIGINT) AS blob_id", "warc")
-            .as[(Long, Array[Byte])]
-          // the loss columns ride the extraction as passthroughs (the
-          // batch operator VERBATIM, extra columns untouched);
-          // materialize eagerly — foreachBatch frames are only valid
-          // within their micro-batch
-          sink.add(Crawl.extractFrom(Warc.extractHostile(blobs),
-              extra = Seq("skipped_spans", "skipped_bytes",
-                "skipped_members", "skipped_member_bytes"))
-            .localCheckpoint(true))
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    sink.asScala.toSeq match {
-      case Seq() =>
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("doc_id", LongType), StructField("http_status", LongType),
-            StructField("n_blocks", LongType), StructField("n_kept", LongType),
-            StructField("kept_chars", LongType), StructField("total_chars", LongType),
-            StructField("boiler_bp", LongType), StructField("extracted", StringType),
-            StructField("skipped_spans", LongType), StructField("skipped_bytes", LongType),
-            StructField("skipped_members", LongType), StructField("skipped_member_bytes", LongType))))
-      case parts => parts.reduce(_ unionByName _)
+    // the loss columns ride the extraction as passthroughs (the batch
+    // operator VERBATIM, extra columns untouched)
+    def extract(batch: DataFrame): DataFrame = Crawl.extractFrom(
+      Warc.extractHostile(batch.selectExpr("CAST(blob_id AS BIGINT) AS blob_id", "warc")
+        .as[(Long, Array[Byte])]),
+      extra = Seq("skipped_spans", "skipped_bytes", "skipped_members", "skipped_member_bytes"))
+    val raw = FileStream.parquet(spark, blobsDir, maxFilesPerTrigger)
+    FileStream.unionBatches(raw, extract(FileStream.emptyLike(raw))) {
+      (batch, _) => extract(batch)
     }
   }
 }

@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.{Crawl, Graph}
 
 /** Streaming LINK-GRAPH maintenance — the arrival-time twin of the
@@ -35,27 +34,12 @@ object StreamingLinkGraph {
   def ingest(spark: SparkSession, docsDir: String, storeDir: String,
              n: Long, queryName: String = "stream_link_graph",
              maxFilesPerTrigger: Option[Int] = None): Int = {
-    val schema = spark.read.parquet(docsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(m =>
-      reader.option("maxFilesPerTrigger", m)).parquet(docsDir)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = raw.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", s"$storeDir/_graft_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          batches.incrementAndGet()
-          val edges = Crawl.linkEdgesFrom(
-            batch.selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text"), n)
-          TxnSink.append(edges, storeDir, batchId)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
+    FileStream.foreachBatch(FileStream.parquet(spark, docsDir, maxFilesPerTrigger),
+        Some(queryName), Some(s"$storeDir/_graft_checkpoint")) { (batch, batchId) =>
+      val edges = Crawl.linkEdgesFrom(
+        batch.selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text"), n)
+      TxnSink.append(edges, storeDir, batchId)
+    }
   }
 
   /** The committed edge set (empty two-column frame if nothing has
@@ -93,56 +77,40 @@ object StreamingLinkGraph {
                         storeDir: String, n: Long, maxDepth: Int = 8,
                         queryName: String = "stream_link_graph_inc",
                         maxFilesPerTrigger: Option[Int] = None): Int = {
-    import org.apache.spark.sql.functions._
-    val schema = spark.read.parquet(docsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(m =>
-      reader.option("maxFilesPerTrigger", m)).parquet(docsDir)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = raw.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", s"$storeDir/_graft_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          batches.incrementAndGet()
-          val newEdges = Crawl.linkEdgesFrom(
-              batch.selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text"), n)
-            .localCheckpoint() // feeds the append AND the candidate join
-          TxnSink.append(newEdges, s"$storeDir/edges", batchId)
-          val allEdges = edges(spark, s"$storeDir/edges")
-          val prev = latestDepths(spark, storeDir)
-          val newSeeds = batch
-            .selectExpr("CAST(doc_id AS BIGINT) AS node")
-            .filter(col("node") % 17 === 0).distinct()
-            .withColumn("depth", lit(0L))
-          val improved = prev match {
-            case None => newSeeds
-            case Some(d) =>
-              // heads of new edges whose tail already has a depth — the
-              // only places a new edge can improve anything
-              val viaNew = newEdges
-                .join(d.select(col("node").as("_t"), col("depth").as("_td")),
-                  col("src") === col("_t"))
-                .select(col("dst").as("node"), (col("_td") + 1L).as("depth"))
-                .filter(col("depth") <= maxDepth)
-              newSeeds.unionByName(viaNew)
-                .groupBy(col("node")).agg(min(col("depth")).as("depth"))
-                .join(d.select(col("node").as("_o"), col("depth").as("_od")),
-                  col("node") === col("_o"), "left")
-                .filter(col("_od").isNull || col("depth") < col("_od"))
-                .select(col("node"), col("depth"))
-          }
-          val init = prev.map(_.unionByName(improved)).getOrElse(improved)
-          val snapshot = Graph.bfsRelax(allEdges, "src", "dst",
-            init, improved, maxRounds = maxDepth, maxDepth = maxDepth.toLong)
-          TxnSink.append(snapshot, s"$storeDir/depths", batchId)
-        }
-        ()
+    FileStream.foreachBatch(FileStream.parquet(spark, docsDir, maxFilesPerTrigger),
+        Some(queryName), Some(s"$storeDir/_graft_checkpoint")) { (batch, batchId) =>
+      val newEdges = Crawl.linkEdgesFrom(
+          batch.selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text"), n)
+        .localCheckpoint() // feeds the append AND the candidate join
+      TxnSink.append(newEdges, s"$storeDir/edges", batchId)
+      val allEdges = edges(spark, s"$storeDir/edges")
+      val prev = latestDepths(spark, storeDir)
+      val newSeeds = batch
+        .selectExpr("CAST(doc_id AS BIGINT) AS node")
+        .filter(col("node") % 17 === 0).distinct()
+        .withColumn("depth", lit(0L))
+      val improved = prev match {
+        case None => newSeeds
+        case Some(d) =>
+          // heads of new edges whose tail already has a depth — the
+          // only places a new edge can improve anything
+          val viaNew = newEdges
+            .join(d.select(col("node").as("_t"), col("depth").as("_td")),
+              col("src") === col("_t"))
+            .select(col("dst").as("node"), (col("_td") + 1L).as("depth"))
+            .filter(col("depth") <= maxDepth)
+          newSeeds.unionByName(viaNew)
+            .groupBy(col("node")).agg(min(col("depth")).as("depth"))
+            .join(d.select(col("node").as("_o"), col("depth").as("_od")),
+              col("node") === col("_o"), "left")
+            .filter(col("_od").isNull || col("depth") < col("_od"))
+            .select(col("node"), col("depth"))
       }
-      .start()
-    q.awaitTermination()
-    batches.get()
+      val init = prev.map(_.unionByName(improved)).getOrElse(improved)
+      val snapshot = Graph.bfsRelax(allEdges, "src", "dst",
+        init, improved, maxRounds = maxDepth, maxDepth = maxDepth.toLong)
+      TxnSink.append(snapshot, s"$storeDir/depths", batchId)
+    }
   }
 
   /** The newest committed depth snapshot (None before any commits). */

@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.ext.Dedup
 
 /** Streaming NEAR-dup ingest — the streaming twin of the batch cross-corpus
@@ -73,10 +73,7 @@ object StreamingNearDup {
                     numHashes: Int = 8, bands: Int = 2,
                     eventTimeCol: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(docsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(docsDir)
+    val raw = FileStream.parquet(spark, docsDir, maxFilesPerTrigger)
     // event-time watermark when the source carries one; processing-time
     // (ingest wall clock) fallback otherwise — see the eviction-clock note.
     // The clock column rides through the SHARED signature/band projections
@@ -94,15 +91,9 @@ object StreamingNearDup {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         pairFn(stateTtlMs) _)
       .toDF("new_id", "ref_id")
-    val q = pairs.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // one emission per SHARED band — collapse to the batch operator's
     // distinct-pair contract
-    spark.table(queryName).select(col("new_id"), col("ref_id")).distinct()
+    FileStream.toMemory(pairs, queryName, "append")
+      .select(col("new_id"), col("ref_id")).distinct()
   }
 }

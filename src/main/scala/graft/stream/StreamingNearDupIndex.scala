@@ -1,7 +1,6 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.Dedup
 
 /** Streaming near-dup ingest against the PERSISTED band index — the
@@ -69,42 +68,24 @@ object StreamingNearDupIndex {
   def runToSnapshot(spark: SparkSession, docsDir: String, indexDir: String,
                     queryName: String = "stream_neardup_index",
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(docsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n)).parquet(docsDir)
-    val sink = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    val q = raw.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", s"$indexDir/_graft_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // the index is RE-READ per batch: earlier batches' appends must
-          // be visible (the fold is the point) — base + committed appends
-          val index = readIndex(spark, indexDir)
-          // the batch's bands are computed ONCE (kernel over the batch
-          // text) and reused for both the audit and the append — and the
-          // audit materializes BEFORE the append makes the batch visible
-          // to itself
-          val bands = Dedup.checkpointStripped(
-            Dedup.nearDupBandIndex(batch, "doc_id", "text"))
-          sink.add(Dedup.nearDupAuditBands(index, bands, "doc_id")
-            .localCheckpoint(true))
-          TxnSink.append(bands, indexDir, batchId)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    sink.asScala.toSeq match {
-      case Seq() =>
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("new_id", LongType),
-            StructField("ref_id", LongType))))
-      case parts => parts.reduce(_ unionByName _).distinct()
-    }
+    val raw = FileStream.parquet(spark, docsDir, maxFilesPerTrigger)
+    // the no-arrival result: the audit over empty bands (this batch body
+    // appends, so it cannot itself run on an empty frame)
+    val noBands = Dedup.nearDupBandIndex(FileStream.emptyLike(raw), "doc_id", "text")
+    FileStream.unionBatches(raw, Dedup.nearDupAuditBands(noBands, noBands, "doc_id"),
+        Some(queryName), Some(s"$indexDir/_graft_checkpoint")) { (batch, batchId) =>
+      // the index is RE-READ per batch: earlier batches' appends must
+      // be visible (the fold is the point) — base + committed appends
+      val index = readIndex(spark, indexDir)
+      // the batch's bands are computed ONCE (kernel over the batch
+      // text) and reused for both the audit and the append — and the
+      // audit materializes BEFORE the append makes the batch visible
+      // to itself
+      val bands = Dedup.checkpointStripped(
+        Dedup.nearDupBandIndex(batch, "doc_id", "text"))
+      val audit = Dedup.nearDupAuditBands(index, bands, "doc_id").localCheckpoint(true)
+      TxnSink.append(bands, indexDir, batchId)
+      audit
+    }.distinct()
   }
 }

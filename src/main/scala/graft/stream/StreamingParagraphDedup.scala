@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.ext.Dedup
 
 /** Streaming paragraph dedup — the streaming twin of the batch CCNet-style
@@ -78,10 +78,7 @@ object StreamingParagraphDedup {
                     maxFilesPerTrigger: Option[Int] = None,
                     eventTimeCol: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(docsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n)).parquet(docsDir)
+    val raw = FileStream.parquet(spark, docsDir, maxFilesPerTrigger)
     val clock = eventTimeCol.map(c => col(c).cast("timestamp"))
       .getOrElse(current_timestamp())
     val blocks = Dedup.wordBlocks(raw, "doc_id", "text", blockWords)
@@ -95,13 +92,6 @@ object StreamingParagraphDedup {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(keepFn(stateTtlMs) _)
       .toDF("doc_id", "bi", "block", "_kept")
-    val q = marked.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Dedup.rollupParagraphBlocks(spark.table(queryName))
+    Dedup.rollupParagraphBlocks(FileStream.toMemory(marked, queryName, "append"))
   }
 }

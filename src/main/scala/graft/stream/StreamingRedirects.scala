@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.{Redirects, Warc}
 
 /** Streaming redirect-graph ingest — the arrival-time twin of the q212
@@ -54,31 +53,15 @@ object StreamingRedirects {
              queryName: String = "stream_redirects",
              maxFilesPerTrigger: Option[Int] = None): Int = {
     import spark.implicits._
-    val schema = spark.read.parquet(blobsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n)).parquet(blobsDir)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = raw.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", s"$metaDir/_graft_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          batches.incrementAndGet()
-          val blobs = batch
-            .selectExpr("CAST(blob_id AS BIGINT) AS blob_id", "warc")
-            .as[(Long, Array[Byte])]
-          TxnSink.append(
-            Warc.extractHttpMeta(blobs)
-              .select("uri", "http_status", "location"),
-            metaDir, batchId)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
+    FileStream.foreachBatch(FileStream.parquet(spark, blobsDir, maxFilesPerTrigger),
+        Some(queryName), Some(s"$metaDir/_graft_checkpoint")) { (batch, batchId) =>
+      val blobs = batch
+        .selectExpr("CAST(blob_id AS BIGINT) AS blob_id", "warc")
+        .as[(Long, Array[Byte])]
+      TxnSink.append(
+        Warc.extractHttpMeta(blobs).select("uri", "http_status", "location"),
+        metaDir, batchId)
+    }
   }
 
   /** The store's metadata rows (uri, http_status, location): the

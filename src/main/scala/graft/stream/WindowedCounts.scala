@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Event-time tumbling-window aggregation as a streaming query (SURVEY.md
   * §2.9 demo surface): parquet file stream → watermark → windowed counts.
@@ -16,15 +15,7 @@ object WindowedCounts {
   def hourlyCounts(spark: SparkSession, eventsParquet: String,
                    watermark: String = "1 hour",
                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(eventsParquet).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(eventsParquet)
-    val events =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw.withColumn("ts", col("ts").cast("timestamp"))
-    events
+    FileStream.events(spark, eventsParquet, maxFilesPerTrigger)
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
@@ -36,14 +27,7 @@ object WindowedCounts {
     * batch-comparable snapshot). */
   def runToSnapshot(spark: SparkSession, eventsParquet: String,
                     queryName: String = "hourly_counts",
-                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val q = hourlyCounts(spark, eventsParquet, maxFilesPerTrigger = maxFilesPerTrigger).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+                    maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    FileStream.toMemory(hourlyCounts(spark, eventsParquet, maxFilesPerTrigger = maxFilesPerTrigger),
+      queryName, "complete")
 }

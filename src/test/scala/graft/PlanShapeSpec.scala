@@ -835,21 +835,11 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"rank adjacency must be an equi-join:\n$plan")
-    // the AuditWindows invariant, asserted structurally on this plan:
+    // the no-funnel-window invariant (QueriesSpec checks every query),
     // every WindowExec carries a non-empty partition spec
-    def unpartitioned(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.window.WindowExec] = {
-      val here = p match {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-          if w.partitionSpec.isEmpty => Seq(w)
-        case _ => Seq.empty
-      }
-      here ++ p.children.flatMap(unpartitioned) ++
-        p.subqueries.flatMap(unpartitioned)
-    }
     val wins = "Window".r.findAllIn(plan).length
     assert(wins >= 1, s"expected ranking windows in the plan:\n$plan")
-    assert(unpartitioned(qe.sparkPlan).isEmpty,
+    assert(PlanWalk.unpartitionedWindows(qe.sparkPlan).isEmpty,
       s"unpartitioned WindowExec in the suffix rank:\n$plan")
   }
 
@@ -890,16 +880,6 @@ class PlanShapeSpec extends AnyFunSuite {
   test("q177-q180: dedup/audit layers are equi-joins and map-side blocks — " +
        "no nested loops, no unpartitioned windows, q179 join-free") {
     import org.apache.spark.sql.functions.col
-    def unpartitioned(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.window.WindowExec] = {
-      val here = p match {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-          if w.partitionSpec.isEmpty => Seq(w)
-        case _ => Seq.empty
-      }
-      here ++ p.children.flatMap(unpartitioned) ++
-        p.subqueries.flatMap(unpartitioned)
-    }
     val docs = graft.util.Tables.load(spark, dir, "documents")
     val emb = graft.util.Tables.load(spark, dir, "embeddings")
     val q177 = graft.ext.Dedup.paragraphDedup(docs, "doc_id", "text", 20)
@@ -922,12 +902,12 @@ class PlanShapeSpec extends AnyFunSuite {
       .queryExecution
     val p179 = q179.sparkPlan.toString
     assert(!p179.contains("Join"), s"q179 must be join-free:\n$p179")
-    assert(unpartitioned(q179.sparkPlan).isEmpty)
+    assert(PlanWalk.unpartitionedWindows(q179.sparkPlan).isEmpty)
     val q180 = graft.ext.Similarity.prototypicalityPrune(emb, "vec_id",
         "embedding", "label", 6000L)
       .queryExecution
     val p180 = q180.sparkPlan.toString
-    assert(unpartitioned(q180.sparkPlan).isEmpty,
+    assert(PlanWalk.unpartitionedWindows(q180.sparkPlan).isEmpty,
       s"the hardness rank must stay a per-label window:\n$p180")
     assert(!p180.contains("BroadcastNestedLoopJoin") &&
       !p180.contains("CartesianProduct"))
@@ -936,16 +916,6 @@ class PlanShapeSpec extends AnyFunSuite {
   test("q187/q188/q189: incremental audits join only by hash/broadcast — " +
        "no nested loops, no unpartitioned windows in the corpus path") {
     import org.apache.spark.sql.functions.col
-    def unpartitioned(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.window.WindowExec] = {
-      val here = p match {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-          if w.partitionSpec.isEmpty => Seq(w)
-        case _ => Seq.empty
-      }
-      here ++ p.children.flatMap(unpartitioned) ++
-        p.subqueries.flatMap(unpartitioned)
-    }
     val docs = graft.util.Tables.load(spark, dir, "documents")
     val emb = graft.util.Tables.load(spark, dir, "embeddings")
     val index = graft.ext.SuffixArray.contaminationIndex(
@@ -959,7 +929,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val p187 = q187.sparkPlan.toString
     assert(!p187.contains("BroadcastNestedLoopJoin") &&
       !p187.contains("CartesianProduct"), s"carry must broadcast-hash:\n$p187")
-    assert(unpartitioned(q187.sparkPlan).isEmpty,
+    assert(PlanWalk.unpartitionedWindows(q187.sparkPlan).isEmpty,
       s"no corpus-wide window in the audit:\n$p187")
     assert(p187.contains("BroadcastHashJoin"),
       s"the _pid carry join must be a broadcast hash join:\n$p187")
@@ -969,7 +939,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val p189 = q189.sparkPlan.toString
     assert(!p189.contains("BroadcastNestedLoopJoin") &&
       !p189.contains("CartesianProduct"))
-    assert(unpartitioned(q189.sparkPlan).isEmpty,
+    assert(PlanWalk.unpartitionedWindows(q189.sparkPlan).isEmpty,
       s"island merge must stay per-doc windows:\n$p189")
     // q188: assignment is map-side against literal centroids — the plan
     // has NO join at all below the bounded nlist-row report frame except
@@ -981,7 +951,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val p188 = q188.sparkPlan.toString
     assert(!p188.contains("BroadcastNestedLoopJoin") &&
       !p188.contains("CartesianProduct"))
-    assert(unpartitioned(q188.sparkPlan).isEmpty,
+    assert(PlanWalk.unpartitionedWindows(q188.sparkPlan).isEmpty,
       s"totals must ride the constant-key bounded window:\n$p188")
   }
 

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every SparkEntry query runs and returns rows on sf0.001, and every oracle
-  * key has a matching query (driver-contract invariants). */
+/** Every SparkEntry query runs and returns rows on sf0.001, its physical
+  * plan has no unpartitioned WindowExec, and every oracle key has a
+  * matching query (driver-contract invariants). */
 class QueriesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -21,6 +22,9 @@ class QueriesSpec extends AnyFunSuite {
     test(s"$name runs and returns rows on sf0.001") {
       val df = fn(spark, dir)
       assert(df.columns.nonEmpty)
+      val funnels = PlanWalk.unpartitionedWindows(df.queryExecution.executedPlan)
+      assert(funnels.isEmpty, s"$name has an unpartitioned WindowExec: " +
+        funnels.map(_.windowExpression.mkString(", ")).mkString("; "))
       assert(df.count() > 0, s"$name returned no rows")
     }
   }

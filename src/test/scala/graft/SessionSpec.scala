@@ -10,7 +10,7 @@ class SessionSpec extends AnyFunSuite {
 
   test("the test session carries the session factory's conf") {
     // a fresh session of the same context resolves graft_dot through the
-    // extension alone (no GraftFunctions.register on it), and the
+    // extension alone (there is no other install path), and the
     // extension's optimizer rule is injected exactly once
     val fresh = spark.newSession()
     assert(fresh.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))")

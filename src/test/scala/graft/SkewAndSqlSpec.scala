@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Skew
-import graft.functions.{GraftFunctions, HilbertIndex, MinHashSlots, TextDHash, WinnowFingerprints}
+import graft.functions.{HilbertIndex, MinHashSlots, TextDHash, WinnowFingerprints}
 
 /** Salted-join / salted-agg equivalence and the SQL function surface. */
 class SkewAndSqlSpec extends AnyFunSuite {
@@ -57,7 +57,6 @@ class SkewAndSqlSpec extends AnyFunSuite {
   }
 
   test("graft_dot is callable from SQL after registration") {
-    GraftFunctions.register(spark)
     val r = spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .head().getDouble(0)
     assert(r == 11.0)
@@ -65,7 +64,6 @@ class SkewAndSqlSpec extends AnyFunSuite {
 
   test("constant-arg kernels are callable from SQL; each matches its DataFrame twin") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     // shingles with a foldable width
     val sh = spark.sql(
       "SELECT graft_word_shingles('a b c d', 3) AS s").head().getSeq[String](0)

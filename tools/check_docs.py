@@ -12,13 +12,17 @@ maps share the same key set, the regex dedups via a set) and fails if:
   * a test-count claim ("N ScalaTest" / "N tests") in README/NOTES differs
     from the count passed via --tests (the number sbt prints; omit to skip);
   * README.md or the verify SKILL names a `runMain graft.X` for which
-    src/main has no `object X` with a `main` (a deleted tool still named).
+    src/main has no `object X` with a `main` (a deleted tool still named);
+  * README.md's Layout block lists a `X.scala` file (an entry under
+    `src/main/scala/graft/`, e.g. `Verify.scala` or `schema/Schemas.scala`)
+    that does not exist.
 
 Run from the repo root as the LAST step before the end-of-round docs
 commit:  python3 tools/check_docs.py [--tests 302]
 Exit 0 = consistent; nonzero prints every mismatch.
 """
 import glob
+import os
 import re
 import sys
 
@@ -79,6 +83,18 @@ def main() -> int:
             if m not in mains:
                 errs.append(f"{path}: names 'runMain {m}' but src/main has "
                             f"no object {m.rsplit('.', 1)[1]} with a main")
+
+    # the Layout block's file entries sit at a two-space indent under
+    # `src/main/scala/graft/`; continuation lines are indented deeper
+    layout = re.search(r"^## Layout\n+```\n(.*?)^```", docs["README.md"],
+                       re.M | re.S)
+    if layout is None:
+        errs.append("README.md: no fenced block under '## Layout'")
+    else:
+        for f in re.findall(r"^  ([\w/]+\.scala)\b", layout.group(1), re.M):
+            if not os.path.isfile(os.path.join("src/main/scala/graft", f)):
+                errs.append(f"README.md: Layout lists '{f}' but "
+                            f"src/main/scala/graft/{f} does not exist")
 
     # COVERAGE.md cites queries in the short "oracle: qNN" form — require
     # each query's qNN token (word-bounded so q10 does not match q100)
