@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
+import graft.util.TableDir
 
 /** Small-file compaction for parquet tables — the table-maintenance
   * operator every incremental sink eventually needs: repeated merge-writes
@@ -18,8 +19,9 @@ import org.apache.spark.sql.functions.col
   * caps parallelism at n for the read too; a fixed `repartition(n)` needs
   * the row count known in advance (an extra action at best, a guess at
   * worst). Partition columns are preserved (`partitionBy` on the observed
-  * partition spec), and only the swap is non-concurrent — the rewrite
-  * itself never blocks readers of the old files.
+  * partition spec), and only the swap ([[TableDir.publish]]) is
+  * non-concurrent — the rewrite itself never blocks readers of the old
+  * files. A run that crashed mid-swap is rolled back on the next run.
   */
 object Compact {
 
@@ -27,21 +29,19 @@ object Compact {
   def compact(spark: SparkSession, dir: String,
               maxRecordsPerFile: Long,
               partitionCols: Seq[String] = Nil): (Long, Long) = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = new Path(dir.stripSuffix("/") + "._compact_tmp")
+    val aside = new Path(dir.stripSuffix("/") + "._compact_old")
+    TableDir.rollBack(fs, p, staged, aside)
     val before = dataFileCount(spark, dir)
     val df = spark.read.parquet(dir)
-    val staged = dir.stripSuffix("/") + "._compact_tmp"
     val writer = df.hint("rebalance", partitionCols.map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(staged)
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // swap: the old table vanishes only after the staging write committed
-    val old = new Path(dir.stripSuffix("/") + "._compact_old")
-    require(fs.rename(p, old), s"compact: could not move $dir aside")
-    require(fs.rename(new Path(staged), p), s"compact: could not publish $staged")
-    fs.delete(old, true)
+      .parquet(staged.toString)
+    TableDir.publish(fs, p, staged, aside)
     (before, dataFileCount(spark, dir))
   }
 

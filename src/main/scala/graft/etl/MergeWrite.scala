@@ -127,7 +127,6 @@ object MergeWrite {
 
   private def tableExists(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
+    graft.util.TableDir.holdsData(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 }

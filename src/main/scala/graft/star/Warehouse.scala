@@ -3,6 +3,7 @@ package graft.star
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
+import graft.util.TableDir
 
 /** Parquet-backed warehouse: one directory per table under `dir`. Stands in
   * for the reference's Postgres schema (no JDBC target in this harness —
@@ -12,18 +13,19 @@ import org.apache.spark.sql.types.StructType
 final class Warehouse(val spark: SparkSession, val dir: String) {
 
   private def path(table: String) = new Path(s"$dir/$table")
+  private def staged(table: String) = new Path(s"$dir/.${table}_tmp")
+  private def aside(table: String) = new Path(s"$dir/.${table}_old")
   private def fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** A table exists only if it has at least one DATA file — a dir holding
-    * just a `_SUCCESS` marker (e.g. from appending an empty frame before the
-    * table was ever loaded) is not a table; reading it would fail schema
-    * inference. */
+  /** A table exists only if it holds data ([[TableDir.holdsData]]) — a dir
+    * with just a `_SUCCESS` marker (an empty frame appended before the
+    * table was ever loaded) or a killed write's `_temporary` would fail
+    * schema inference. On a miss, an [[overwrite]] interrupted between its
+    * renames is rolled back first. */
   def exists(table: String): Boolean = {
     val p = path(table)
-    fs.exists(p) && fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      s.isDirectory || (!n.startsWith("_") && !n.startsWith("."))
-    }
+    TableDir.holdsData(fs, p) ||
+      (TableDir.rollBack(fs, p, staged(table), aside(table)) && TableDir.holdsData(fs, p))
   }
 
   // Table schemas as first inferred: every `spark.read.parquet` without a
@@ -134,30 +136,22 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     obs.get("n").asInstanceOf[Long]
   }
 
-  /** Full rewrite via staging + rename swap (safe when `df`'s plan reads the
-    * table being replaced). The old table is renamed ASIDE, the staged data
-    * renamed in, and only then is the old data deleted — so the no-table
-    * window is two metadata renames, not a recursive delete, and a crash
-    * mid-swap leaves the previous data recoverable at the aside path instead
-    * of gone. */
+  /** Full rewrite via a staged dir and [[TableDir.publish]] (safe when `df`'s
+    * plan reads the table being replaced): the no-table window is two
+    * metadata renames, not a recursive delete, and a crash mid-swap leaves
+    * the previous data at `.<table>_old`, where [[exists]] rolls it back. */
   def overwrite(table: String, df: DataFrame): Unit =
     overwriteWithProbe(table, df, _ => ())
 
   /** [[overwrite]] with a step-boundary callback so specs can assert the
-    * table stays visible across the swap. */
+    * table stays visible across the swap. `publish` swaps and cleans in one
+    * call, so "swapped" and "cleaned" fire back to back. */
   private[graft] def overwriteWithProbe(table: String, df: DataFrame,
                                         probe: String => Unit): Unit = {
-    val tmp = new Path(s"$dir/.${table}_tmp")
-    val aside = new Path(s"$dir/.${table}_old")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    df.write.mode(SaveMode.Overwrite).parquet(staged(table).toString)
     probe("staged")
-    if (fs.exists(aside)) fs.delete(aside, true)
-    val target = path(table)
-    val hadOld = fs.exists(target)
-    if (hadOld) fs.rename(target, aside)
-    fs.rename(tmp, target)
+    TableDir.publish(fs, path(table), staged(table), aside(table))
     probe("swapped")
-    if (hadOld) fs.delete(aside, true)
     probe("cleaned")
     schemas.remove(table)
     invalidate(table)

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 import graft.ext.Mv
+import graft.util.TableDir
 
 /** Continuous materialized-view maintenance: each micro-batch of fact rows
   * is partial-aggregated and merged into a parquet-backed aggregate view
@@ -57,67 +58,42 @@ object MvStream {
     val mergeFn = merge.getOrElse(Mv.mergeAggregates(_: DataFrame, _: DataFrame, keys))
     val merged = readView(spark, viewDir).map(mergeFn(_, partial))
       .getOrElse(partial)
-    publish(spark, viewDir, merged, batchId)
+    // stage data + marker together, then swap them in (TableDir.publish):
+    // the merge reads the state it replaces
+    val (fs, p, staged, aside) = dirs(spark, viewDir)
+    merged.write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    val out = fs.create(new Path(staged, "_LAST_BATCH"), true)
+    try out.write(batchId.toString.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    TableDir.publish(fs, p, staged, aside)
   }
 
-  /** Single-writer crash recovery: a crash between [[publish]]'s two
-    * renames leaves the primary dir MISSING with the previous state parked
-    * at `._mv_old` (and the new state staged at `._mv_tmp`). Reading
-    * "missing" as "empty" there would silently drop the whole view, so
-    * every read first rolls the `_old` dir back — a fully-consistent
-    * (state, marker) pair one batch behind; the streaming engine then
-    * re-delivers that batch and the merge re-applies it, and exactly-once
-    * resumes. (Primary present ⇒ nothing to do: a crash after the second
-    * rename only leaves stale side dirs, which the next publish clears.) */
-  private def recoverIfInterrupted(spark: SparkSession, viewDir: String): Unit = {
+  // (fs, view, staged, aside). Every read first rolls an interrupted
+  // swap back (TableDir.rollBack): a consistent (state, marker) pair one
+  // batch behind, which the engine re-delivers and the merge re-applies.
+  private def dirs(spark: SparkSession, viewDir: String) = {
     val p = new Path(viewDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(viewDir.stripSuffix("/") + "._mv_old")
-    if (!fs.exists(p) && fs.exists(old)) {
-      require(fs.rename(old, p), s"mv: could not roll back $old")
-      fs.delete(new Path(viewDir.stripSuffix("/") + "._mv_tmp"), true)
-    }
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      new Path(viewDir.stripSuffix("/") + "._mv_tmp"),
+      new Path(viewDir.stripSuffix("/") + "._mv_old"))
   }
 
   def readView(spark: SparkSession, viewDir: String): Option[DataFrame] = {
-    recoverIfInterrupted(spark, viewDir)
-    val p = new Path(viewDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, p, staged, aside) = dirs(spark, viewDir)
+    TableDir.rollBack(fs, p, staged, aside)
     if (fs.exists(p)) Some(spark.read.parquet(viewDir)) else None
   }
 
   def lastApplied(spark: SparkSession, viewDir: String): Option[Long] = {
-    recoverIfInterrupted(spark, viewDir)
-    val p = new Path(viewDir.stripSuffix("/") + "/_LAST_BATCH")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
+    val (fs, p, staged, aside) = dirs(spark, viewDir)
+    TableDir.rollBack(fs, p, staged, aside)
+    val marker = new Path(p, "_LAST_BATCH")
+    if (!fs.exists(marker)) None
     else {
-      val in = fs.open(p)
+      val in = fs.open(marker)
       try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in),
         StandardCharsets.UTF_8).trim.toLong)
       finally in.close()
-    }
-  }
-
-  /** Stage data + marker together, then swap directories — the merge reads
-    * the state it replaces (same idiom as [[Scd2Stream]]/`etl/Compact`). */
-  private def publish(spark: SparkSession, viewDir: String, df: DataFrame,
-                      batchId: Long): Unit = {
-    val staged = viewDir.stripSuffix("/") + "._mv_tmp"
-    df.write.mode(SaveMode.Overwrite).parquet(staged)
-    val fs = new Path(viewDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(staged + "/_LAST_BATCH"), true)
-    try out.write(batchId.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val p = new Path(viewDir)
-    if (fs.exists(p)) {
-      val old = new Path(viewDir.stripSuffix("/") + "._mv_old")
-      fs.delete(old, true)
-      require(fs.rename(p, old), s"mv: could not move $viewDir aside")
-      require(fs.rename(new Path(staged), p), s"mv: could not publish $staged")
-      fs.delete(old, true)
-    } else {
-      require(fs.rename(new Path(staged), p), s"mv: could not publish $staged")
     }
   }
 }

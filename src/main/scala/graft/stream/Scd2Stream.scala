@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 import graft.ext.Scd
+import graft.util.TableDir
 
 /** SCD Type-2 maintenance as a streaming sink: each micro-batch of
   * dimension updates merges into a parquet-backed version history via
@@ -31,56 +32,32 @@ object Scd2Stream {
                       maxFilesPerTrigger: Option[Int] = None): Unit = {
     FileStream.foreachBatch(FileStream.parquet(spark, updatesDir, schema, maxFilesPerTrigger),
         checkpointDir = Some(checkpointDir)) { (batch, batchId) =>
-      val merged = Scd.scd2Merge(readState(spark, stateDir, batch, keyCol, attrCols),
+      // staged, then swapped in (TableDir.publish): the merge READS the
+      // state it replaces, so a direct overwrite would truncate its input
+      val (fs, p, staged, aside) = dirs(spark, stateDir)
+      Scd.scd2Merge(readState(spark, stateDir, batch, keyCol, attrCols),
         batch, keyCol, attrCols, batchId + 1)
-      publish(spark, stateDir, merged)
+        .write.mode(SaveMode.Overwrite).parquet(staged.toString)
+      TableDir.publish(fs, p, staged, aside)
     }
   }
 
   /** Current state, or an empty zero-version state derived from the batch
-    * schema on first contact. */
+    * schema on first contact. An interrupted swap is rolled back first ([[TableDir.rollBack]], as in [[MvStream.readView]]); the
+    * re-delivered batch re-merges (idempotent — attrs equal is a no-op). */
   def readState(spark: SparkSession, stateDir: String, batch: DataFrame,
                 keyCol: String, attrCols: Seq[String]): DataFrame = {
-    recoverIfInterrupted(spark, stateDir)
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, p, staged, aside) = dirs(spark, stateDir)
+    TableDir.rollBack(fs, p, staged, aside)
     if (fs.exists(p)) spark.read.parquet(stateDir)
     else Scd.scd2Init(batch.limit(0), keyCol, attrCols, 0L)
   }
 
-  /** Single-writer crash recovery (same contract as
-    * [[MvStream.recoverIfInterrupted]]): a crash between [[publish]]'s two
-    * renames leaves the primary missing with the previous history parked at
-    * `._scd2_old`; reading "missing" as "empty" would drop the whole SCD2
-    * history, so roll the `_old` dir back and let the re-delivered batch
-    * re-merge (idempotent — attrs equal is a no-op). */
-  private def recoverIfInterrupted(spark: SparkSession, stateDir: String): Unit = {
+  // (fs, state, staged, aside)
+  private def dirs(spark: SparkSession, stateDir: String) = {
     val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(stateDir.stripSuffix("/") + "._scd2_old")
-    if (!fs.exists(p) && fs.exists(old)) {
-      require(fs.rename(old, p), s"scd2: could not roll back $old")
-      fs.delete(new Path(stateDir.stripSuffix("/") + "._scd2_tmp"), true)
-    }
-  }
-
-  /** Stage-and-swap overwrite: the merge READS the state it replaces, so a
-    * direct overwrite would truncate its own input mid-plan; the rename
-    * publishes only a fully-committed state (same idiom as
-    * [[graft.etl.Compact]]). */
-  private def publish(spark: SparkSession, stateDir: String, df: DataFrame): Unit = {
-    val staged = stateDir.stripSuffix("/") + "._scd2_tmp"
-    df.write.mode(SaveMode.Overwrite).parquet(staged)
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val old = new Path(stateDir.stripSuffix("/") + "._scd2_old")
-      fs.delete(old, true)
-      require(fs.rename(p, old), s"scd2: could not move $stateDir aside")
-      require(fs.rename(new Path(staged), p), s"scd2: could not publish $staged")
-      fs.delete(old, true)
-    } else {
-      require(fs.rename(new Path(staged), p), s"scd2: could not publish $staged")
-    }
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      new Path(stateDir.stripSuffix("/") + "._scd2_tmp"),
+      new Path(stateDir.stripSuffix("/") + "._scd2_old"))
   }
 }
