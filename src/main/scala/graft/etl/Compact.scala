@@ -31,8 +31,7 @@ object Compact {
               partitionCols: Seq[String] = Nil): (Long, Long) = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = new Path(dir.stripSuffix("/") + "._compact_tmp")
-    val aside = new Path(dir.stripSuffix("/") + "._compact_old")
+    val (staged, aside) = TableDir.siblings(p, "compact")
     TableDir.rollBack(fs, p, staged, aside)
     val before = dataFileCount(spark, dir)
     val df = spark.read.parquet(dir)

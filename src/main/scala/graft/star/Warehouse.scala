@@ -111,8 +111,10 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
   private[graft] def peekMaxId(table: String): Option[Long] =
     synchronized(maxIds.get(table))
 
-  /** Append new rows (the U1 insert-only path — callers anti-join first). */
+  /** Append new rows (the U1 insert-only path — callers anti-join first),
+    * after dropping a killed write's `_temporary` ([[TableDir.dropDeadWrite]]). */
   def append(table: String, df: DataFrame): Unit = {
+    TableDir.dropDeadWrite(fs, path(table))
     df.write.mode(SaveMode.Append).parquet(path(table).toString)
     invalidate(table)
   }
@@ -128,6 +130,7 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     * write still drops the table's read cache. Callers that know the delta
     * is empty ([[Dims.loadSimpleDimsFused]]) skip the append instead. */
   def appendCounted(table: String, df: DataFrame): Long = {
+    TableDir.dropDeadWrite(fs, path(table))
     val obs = org.apache.spark.sql.Observation()
     df.observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))
@@ -144,15 +147,15 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     overwriteWithProbe(table, df, _ => ())
 
   /** [[overwrite]] with a step-boundary callback so specs can assert the
-    * table stays visible across the swap. `publish` swaps and cleans in one
-    * call, so "swapped" and "cleaned" fire back to back. */
+    * table stays visible across the swap. `publish` also drops the aside
+    * copy, so "swapped" and "cleaned" both name the one post-publish point
+    * (WarehouseCacheSpec still expects three steps). */
   private[graft] def overwriteWithProbe(table: String, df: DataFrame,
                                         probe: String => Unit): Unit = {
     df.write.mode(SaveMode.Overwrite).parquet(staged(table).toString)
     probe("staged")
     TableDir.publish(fs, path(table), staged(table), aside(table))
-    probe("swapped")
-    probe("cleaned")
+    Seq("swapped", "cleaned").foreach(probe)
     schemas.remove(table)
     invalidate(table)
   }

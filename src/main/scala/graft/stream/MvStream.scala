@@ -60,7 +60,8 @@ object MvStream {
       .getOrElse(partial)
     // stage data + marker together, then swap them in (TableDir.publish):
     // the merge reads the state it replaces
-    val (fs, p, staged, aside) = dirs(spark, viewDir)
+    val (fs, p) = rolledBack(spark, viewDir)
+    val (staged, aside) = TableDir.siblings(p, "mv")
     merged.write.mode(SaveMode.Overwrite).parquet(staged.toString)
     val out = fs.create(new Path(staged, "_LAST_BATCH"), true)
     try out.write(batchId.toString.getBytes(StandardCharsets.UTF_8))
@@ -68,25 +69,24 @@ object MvStream {
     TableDir.publish(fs, p, staged, aside)
   }
 
-  // (fs, view, staged, aside). Every read first rolls an interrupted
-  // swap back (TableDir.rollBack): a consistent (state, marker) pair one
-  // batch behind, which the engine re-delivers and the merge re-applies.
-  private def dirs(spark: SparkSession, viewDir: String) = {
+  // Every read first rolls an interrupted swap back (TableDir.rollBack): a
+  // consistent (state, marker) pair one batch behind, which the engine
+  // re-delivers and the merge re-applies.
+  private def rolledBack(spark: SparkSession, viewDir: String) = {
     val p = new Path(viewDir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
-      new Path(viewDir.stripSuffix("/") + "._mv_tmp"),
-      new Path(viewDir.stripSuffix("/") + "._mv_old"))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (staged, aside) = TableDir.siblings(p, "mv")
+    TableDir.rollBack(fs, p, staged, aside)
+    (fs, p)
   }
 
   def readView(spark: SparkSession, viewDir: String): Option[DataFrame] = {
-    val (fs, p, staged, aside) = dirs(spark, viewDir)
-    TableDir.rollBack(fs, p, staged, aside)
+    val (fs, p) = rolledBack(spark, viewDir)
     if (fs.exists(p)) Some(spark.read.parquet(viewDir)) else None
   }
 
   def lastApplied(spark: SparkSession, viewDir: String): Option[Long] = {
-    val (fs, p, staged, aside) = dirs(spark, viewDir)
-    TableDir.rollBack(fs, p, staged, aside)
+    val (fs, p) = rolledBack(spark, viewDir)
     val marker = new Path(p, "_LAST_BATCH")
     if (!fs.exists(marker)) None
     else {

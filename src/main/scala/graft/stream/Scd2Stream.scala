@@ -34,30 +34,27 @@ object Scd2Stream {
         checkpointDir = Some(checkpointDir)) { (batch, batchId) =>
       // staged, then swapped in (TableDir.publish): the merge READS the
       // state it replaces, so a direct overwrite would truncate its input
-      val (fs, p, staged, aside) = dirs(spark, stateDir)
+      val p = new Path(stateDir)
+      val (staged, aside) = TableDir.siblings(p, "scd2")
       Scd.scd2Merge(readState(spark, stateDir, batch, keyCol, attrCols),
         batch, keyCol, attrCols, batchId + 1)
         .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-      TableDir.publish(fs, p, staged, aside)
+      TableDir.publish(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        p, staged, aside)
     }
   }
 
   /** Current state, or an empty zero-version state derived from the batch
-    * schema on first contact. An interrupted swap is rolled back first ([[TableDir.rollBack]], as in [[MvStream.readView]]); the
-    * re-delivered batch re-merges (idempotent — attrs equal is a no-op). */
+    * schema on first contact. An interrupted swap is rolled back first
+    * ([[TableDir.rollBack]], as in [[MvStream.readView]]); the re-delivered
+    * batch re-merges (idempotent — attrs equal is a no-op). */
   def readState(spark: SparkSession, stateDir: String, batch: DataFrame,
                 keyCol: String, attrCols: Seq[String]): DataFrame = {
-    val (fs, p, staged, aside) = dirs(spark, stateDir)
+    val p = new Path(stateDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (staged, aside) = TableDir.siblings(p, "scd2")
     TableDir.rollBack(fs, p, staged, aside)
     if (fs.exists(p)) spark.read.parquet(stateDir)
     else Scd.scd2Init(batch.limit(0), keyCol, attrCols, 0L)
-  }
-
-  // (fs, state, staged, aside)
-  private def dirs(spark: SparkSession, stateDir: String) = {
-    val p = new Path(stateDir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
-      new Path(stateDir.stripSuffix("/") + "._scd2_tmp"),
-      new Path(stateDir.stripSuffix("/") + "._scd2_old"))
   }
 }

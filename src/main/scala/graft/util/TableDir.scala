@@ -30,6 +30,11 @@ object TableDir {
   def rollBack(fs: FileSystem, target: Path, staged: Path, aside: Path): Boolean =
     !fs.exists(target) && restore(fs, target, aside) && { fs.delete(staged, true); true }
 
+  /** The staged and aside siblings of a table rewritten in place:
+    * `<target>._<tag>_tmp` and `<target>._<tag>_old`. */
+  def siblings(target: Path, tag: String): (Path, Path) =
+    (target.suffix(s"._${tag}_tmp"), target.suffix(s"._${tag}_old"))
+
   private def restore(fs: FileSystem, target: Path, aside: Path): Boolean =
     fs.exists(aside) && { require(fs.rename(aside, target), s"could not roll $aside back"); true }
 
@@ -41,4 +46,14 @@ object TableDir {
       val n = s.getPath.getName
       !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
     }
+
+  /** Delete the committer scratch a killed write left in `dir`. Hadoop's
+    * v1 FileOutputCommitter keeps every job's tasks under the same
+    * `_temporary/0` and at job commit merges all committed task dirs found
+    * there, so the next append into `dir` would publish the dead write's
+    * finished tasks as its own rows. Only the table's writer may call this,
+    * right before it writes: run beside a live write, it deletes that
+    * write's output. */
+  def dropDeadWrite(fs: FileSystem, dir: Path): Unit =
+    fs.delete(new Path(dir, "_temporary"), true)
 }

@@ -91,17 +91,24 @@ class TableDirSpec extends AnyFunSuite {
     assert(back == Seq(("a1", "u1"), ("a2", "u2")))
   }
 
-  test("Warehouse: a table dir holding only _temporary does not exist; append then works") {
+  test("Warehouse: a killed write's committed tasks are not a table and never reach an append") {
     val dir = Files.createTempDirectory("graft_tabledir_tmp")
-    // an uncommitted task attempt of a first write whose driver was killed
-    Seq((9L, "stale")).toDF("id", "k").write.parquet(
-      dir.resolve("t/_temporary/0/_temporary/attempt_0").toString)
+    // a committed task of a write whose driver was killed before job commit:
+    // the v1 committer merges every `_temporary/0/task_*` at the next commit
+    def deadTask(task: String, id: Long): Unit = Seq((id, "stale")).toDF("id", "k")
+      .write.parquet(dir.resolve(s"t/_temporary/0/$task").toString)
+    deadTask("task_0", 9L)
     val wh = new Warehouse(spark, dir.toString)
     assert(!wh.exists("t"))
     assert(wh.readIfExists("t").isEmpty)
     wh.append("t", Seq((1L, "a")).toDF("id", "k"))
     assert(wh.exists("t"))
     assert(rows(wh.read("t")) == Seq((1L, "a")))
+
+    // the same after a killed append into a table that holds data
+    deadTask("task_1", 8L)
+    assert(wh.appendCounted("t", Seq((2L, "b")).toDF("id", "k")) == 1L)
+    assert(rows(wh.read("t")) == Seq((1L, "a"), (2L, "b")))
   }
 
   test("holdsData: partition dirs count, even _-prefixed ones; metadata does not") {
