@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.functions._
 import graft.etl.{Flatten, MergeWrite, Silver, Validate}
 import graft.star.{StarLoad, Warehouse}
 import graft.stream.Incremental

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph-centrality over an edge list — the numeric-fixpoint
@@ -241,7 +241,7 @@ object Graph {
     // seed registers — each node's own (bucket, rho) from the SAME
     // hash/rank expressions as q150's rollup, packed into the array
     var regs = Sketch.hllRanked(
-        nodes.withColumn("_h", Sketch.hllHash(col("node"))), "node")
+        nodes.withColumn("_h", Sketch.hllHash(col("node"))))
       .select(col("node"), col("_bucket").cast("int"), col("_rho").cast("int"))
       .as[(Long, Int, Int)].rdd
       .map { case (n, b, rho) =>

@@ -67,7 +67,7 @@ object Linkage {
     * forward but adjacently reversed), and a production run unions the
     * passes. Output pairs are canonically oriented (name_a < name_b)
     * regardless of the pass's sort order. */
-  def sortedNeighborPairs(df: DataFrame, idCol: String, nameCol: String,
+  def sortedNeighborPairs(df: DataFrame, nameCol: String,
                           window: Int, maxDist: Int,
                           sortKey: Column => Column = identity): DataFrame = {
     require(window >= 1, s"window must be positive, got $window")

@@ -603,7 +603,7 @@ object Sketch {
     * mask (a power of two), via the unpadded base-2 string — exact integer
     * arithmetic on both engines (DuckDB: length(bin(x & -x))); all-zero
     * suffix ⇒ 55. */
-  private[graft] def hllRanked(hashed: DataFrame, groupCol: String): DataFrame =
+  private[graft] def hllRanked(hashed: DataFrame): DataFrame =
     hashed
       .withColumn("_bucket", col("_h") % HllM)
       .withColumn("_rest", expr(s"_h div $HllM"))
@@ -631,7 +631,7 @@ object Sketch {
     val hashed = df.select(
       coalesce(col(groupCol).cast("string"), lit(NullGroup)).as(groupCol),
       col(valueCol), hllHash(col(valueCol)).as("_h"))
-    val perGroup = hllRanked(hashed, groupCol).groupBy(col(groupCol), col("_bucket"))
+    val perGroup = hllRanked(hashed).groupBy(col(groupCol), col("_bucket"))
       .agg(max(col("_rho")).as("_rho"))
       .cache() // input of both output levels; ≤ groups·64 rows
     val global = perGroup.groupBy(col("_bucket"))

@@ -428,7 +428,7 @@ object SuffixArray {
       s"need 1 <= minLen ($minLen) <= k ($k): a k-char prefix cannot " +
         "witness a longer shared span")
     auditRollup(
-      suffixBest(index, prunedCandidates(index, shard, idCol, textCol, minLen, k), k),
+      suffixBest(index, prunedCandidates(index, shard, idCol, textCol, minLen, k)),
       minLen)
   }
 
@@ -453,14 +453,13 @@ object SuffixArray {
   private[graft] def shardSuffixBest(index: DataFrame, shard: DataFrame,
                                      idCol: String, textCol: String,
                                      k: Int): DataFrame =
-    suffixBest(index, wordStartPrefixes(shard, idCol, textCol, k), k)
+    suffixBest(index, wordStartPrefixes(shard, idCol, textCol, k))
 
   /** [[shardSuffixBest]] over an ALREADY-EXTRACTED (and possibly pruned)
     * shard suffix frame `(doc_id, off, prefix)`. Dropping shard rows never
     * changes a surviving row's verdict: `_pred`/`_succ` track the nearest
     * INDEX rows only (`_ib = 1`), and the index side is passed whole. */
-  private[graft] def suffixBest(index: DataFrame, shardSuffixes: DataFrame,
-                                k: Int): DataFrame = {
+  private[graft] def suffixBest(index: DataFrame, shardSuffixes: DataFrame): DataFrame = {
     val slots = shardSuffixes.sparkSession.sparkContext.defaultParallelism
     val s = shardSuffixes.select(col("doc_id"), col("off"), col("prefix"))
       .withColumn("_ib", lit(0))
@@ -558,7 +557,7 @@ object SuffixArray {
       s"need 1 <= minLen ($minLen) <= k ($k): a k-char prefix cannot " +
         "witness a longer shared span")
     exciseFromBest(
-      suffixBest(index, prunedCandidates(index, shard, idCol, textCol, minLen, k), k),
+      suffixBest(index, prunedCandidates(index, shard, idCol, textCol, minLen, k)),
       shard, idCol, textCol, minLen)
   }
 

@@ -257,7 +257,7 @@ object AdvancedJoinQueries {
     val part = load(spark, dir, "part")
     def pass(key: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
              label: String) =
-      graft.ext.Linkage.sortedNeighborPairs(part, "p_partkey", "p_name",
+      graft.ext.Linkage.sortedNeighborPairs(part, "p_name",
           window = 5, maxDist = 2, sortKey = key)
         .withColumn("pass", lit(label))
     pass(identity, "fwd").unionByName(pass(reverse, "rev"))
@@ -291,7 +291,7 @@ object AdvancedJoinQueries {
     val hash = Linkage.blockedFuzzyPairs(sample, "min_id", "name",
       blockKey = name => element_at(split(name, " "), -1), maxDist = wide)
     def pass(key: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      Linkage.sortedNeighborPairs(sample, "min_id", "name",
+      Linkage.sortedNeighborPairs(sample, "name",
         window = 5, maxDist = wide, sortKey = key)
     val sn = pass(identity).unionByName(pass(reverse))
       .select(col("name_a"), col("name_b"), col("dist")).distinct()

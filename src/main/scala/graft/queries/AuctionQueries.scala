@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.{Flatten, Silver}
 import graft.schema.Schemas
-import graft.star.{StarLoad, StateSeed, Warehouse}
+import graft.star.{StarLoad, Warehouse}
+
+import scala.annotation.unused
 
 /** q184 — the REAL auction bronze→silver chain under the DuckDB oracle
   * (round-14 verdict task #2), and q198 — the silver→GOLD star load over the
@@ -65,7 +67,7 @@ object AuctionQueries {
     * (the oracle's `read_json_objects` reads the same two files). */
   val FixtureDir = "/root/repo/fixtures/raw_auctions"
 
-  def q184AuctionSilver(spark: SparkSession, dir: String): DataFrame = {
+  def q184AuctionSilver(spark: SparkSession, @unused dir: String): DataFrame = {
     val silver = Silver.run(Flatten.bronze(spark, FixtureDir))
     silver
       .select(Schemas.insertColumns.map(col).toIndexedSeq: _*)
@@ -93,7 +95,7 @@ object AuctionQueries {
 
   /** q198: full composed star load over the REAL fixture silver frame, every
     * resulting table row tagged and unioned. */
-  def q198AuctionStarLoad(spark: SparkSession, dir: String): DataFrame = {
+  def q198AuctionStarLoad(spark: SparkSession, @unused dir: String): DataFrame = {
     // ONE fixed per-process dir, wiped before each load: a fresh temp dir
     // per invocation leaked a full 12-table warehouse into /tmp on every
     // bench warmup + attempt (unbounded across rounds); the wipe keeps the

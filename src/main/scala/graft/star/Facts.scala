@@ -1,6 +1,6 @@
 package graft.star
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** vehicle_dim (J3 + U2 upsert) and auction_fact (J4 + U1 insert-only) —
@@ -40,65 +40,44 @@ object Facts {
         col("service_count"), col("included_items_count"))
   }
 
-  /** Number of hash buckets vehicle_dim is partitioned into on disk. A key's
-    * bucket is a pure function of (vin, auction_id), so an upsert reads and
-    * rewrites only the buckets its incoming keys fall in (the MergeWrite
-    * date-pruning pattern applied to a keyed dim). Fixed once the table
-    * exists — changing it requires a one-off rebucketing rewrite. */
-  val VehicleDimBuckets = 64
-
-  private[graft] def vehicleBucket(vin: Column, auctionId: Column): Column =
-    pmod(hash(vin, auctionId), lit(VehicleDimBuckets))
-
   /** U2 (Q:158-177): upsert on (vin, auction_id) — incoming wins on all
     * attributes, the existing row keeps its vehicle_id (Postgres ON CONFLICT
     * DO UPDATE preserves the PK). New rows get max(existing)+row_number.
     * [[StarLoad.run]] applies it as this merge + [[writeVehicleDim]].
     *
-    * Scale shape: the dim is hash-bucketed by key on disk; only buckets
-    * containing incoming keys are read (a static partition filter) and
-    * rewritten (dynamic partition overwrite) — never the whole table. The
-    * `maxId` scalar agg scans one column of the full dim (column-pruned);
-    * fresh-key id assignment is a range-shuffled sort + `zipWithIndex`
-    * (see [[assignFreshIds]]) — parallel even when the fresh set is the
-    * whole fact table (initial bulk load).
+    * Scale shape: the incoming rows merge with the whole table, and
+    * [[writeVehicleDim]] republishes it whole, so a load costs O(table). A
+    * hash-bucketed layout that rewrote only the buckets holding incoming
+    * keys pruned nothing at real batch sizes (1,150 keys leave a given one
+    * of 64 buckets untouched with probability ≈ 1e-8) and cost a listing
+    * job and a serial 64-file write per load. The `maxId` scalar agg scans
+    * one column of the dim (column-pruned); fresh-key id assignment is a
+    * range-shuffled sort + `zipWithIndex` (see [[assignFreshIds]]) —
+    * parallel even when the fresh set is the whole fact table (initial bulk
+    * load).
     *
-    * Builds (and checkpoints) the merged rows of the AFFECTED buckets —
-    * every incoming (vin, auction_id) key's final row with its final
-    * vehicle_id. The fact load only ever resolves keys it is currently
-    * staging, and those are all in the affected buckets, so this frame is a
-    * sufficient (and smaller) join side for [[resolveFact]] — letting
-    * [[StarLoad.run]] overlap the bucket write ([[writeVehicleDim]]) with
-    * the fact resolution instead of waiting for the write and re-reading
-    * the table from disk. Returns (merged, previous max vehicle_id). */
+    * Builds (and checkpoints) the merged table — every key's final row with
+    * its final vehicle_id. The fact load joins this frame
+    * ([[resolveFact]]), so [[StarLoad.run]] overlaps the table write
+    * ([[writeVehicleDim]]) with the fact resolution instead of waiting for
+    * the write and re-reading the table from disk. Returns (merged, previous
+    * max vehicle_id). */
   private[graft] def mergedVehicleDim(wh: Warehouse, staging: DataFrame): (DataFrame, Long) = {
     val keys = Seq("vin", "auction_id")
-    val incoming = resolveVehicleAttrs(wh, staging)
-      .withColumn("_bucket", vehicleBucket(col("vin"), col("auction_id")))
-      .withColumn("_inc", lit(1))
-    // ONE read of the table (each read lists all bucket directories) feeds
-    // both the bucket merge and the max-id fallback below
+    val incoming = resolveVehicleAttrs(wh, staging).withColumn("_inc", lit(1))
+    // ONE read of the table feeds both the merge and the max-id fallback
     val existingDim = wh.readIfExists("vehicle_dim")
     val withIds = existingDim match {
       case None => incoming.drop("_inc")
         .withColumn("vehicle_id", lit(null).cast("long"))
       case Some(existing) =>
-        // partition-pruned: only buckets containing incoming keys are read.
-        // The bucket is a pure function of the STAGED key columns, so the
-        // affected set derives straight from the (cached) staging frame —
-        // deriving it from `incoming` instead would execute the whole 5-way
-        // attr resolution a second time. It holds at most VehicleDimBuckets
-        // values, so ONE job (a set per partition, no shuffle) brings it to
-        // the driver and the bucket filter prunes statically; a broadcast
-        // semi-join of a DISTINCT costs a shuffle job plus a broadcast job
-        val affected = staging
-          .select(vehicleBucket(trim(col("vin")), col("auction_id")))
-          .rdd.mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
-          .collect().toSeq.flatten.distinct.sorted
-        val hit = existing.filter(col("_bucket").isin(affected: _*))
+        val attrs = incoming.columns.filterNot(c => keys.contains(c) || c == "_inc")
+        // by name: a table still in the old `_bucket=N` layout drops its
+        // partition column here, and this load's write flattens it
+        val old = existing.select((keys ++ attrs :+ "vehicle_id").map(col): _*)
           .withColumn("_inc", lit(0))
         val union = incoming.withColumn("vehicle_id", lit(null).cast("long"))
-          .unionByName(hit)
+          .unionByName(old)
         // incoming-wins merge as ONE map-side-combinable aggregation: per
         // key (≤ 2 rows: one staged, one existing — staging is keep-newest
         // per auction_id and the table is key-unique) take the higher-_inc
@@ -107,8 +86,6 @@ object Facts {
         // keys together — exactly the null-safe (<=>) matching the old
         // window + id-recovery join needed; this shape is one shuffle
         // instead of window-shuffle + join.
-        val attrs = union.columns.filterNot(c =>
-          keys.contains(c) || c == "vehicle_id" || c == "_inc")
         union.groupBy(keys.map(col): _*)
           .agg(
             max_by(struct(attrs.map(col): _*), col("_inc")).as("_r"),
@@ -126,30 +103,24 @@ object Facts {
     // ONE materialization (eager localCheckpoint) feeds everything below:
     // the keyed/fresh split, the id-assignment sort+zipWithIndex, and the
     // final write all read executor-local blocks instead of re-running the
-    // resolution joins — and the checkpoint already cut lineage to
-    // vehicle_dim, so the write needs no second snap.
+    // resolution joins — and the checkpoint cuts lineage to vehicle_dim
+    // before the write replaces it.
     val snapped = withIds.localCheckpoint()
     val keyed = snapped.filter(col("vehicle_id").isNotNull)
     val fresh = assignFreshIds(snapped.filter(col("vehicle_id").isNull), maxId)
     (keyed.unionByName(fresh), maxId)
   }
 
-  /** The U2 bucket write for [[mergedVehicleDim]]'s output. Clusters by the
-    * on-disk partition key before the partitioned write: without it every
-    * task writes a sliver file into every bucket it touches (tasks × buckets
-    * files + as many dynamic-overwrite commits); with it each bucket is one
-    * task's contiguous write — bounded file count at any scale, one cheap
-    * shuffle of the affected buckets. An Observation on the write records
-    * the new max vehicle_id (fresh ids are assigned above the old global
-    * max, so max(prevMax, max over merged) is the table's new high-water
-    * mark) — the NEXT incremental load skips its max-id scan entirely. */
+  /** The U2 write for [[mergedVehicleDim]]'s output: the whole table,
+    * republished by [[Warehouse.overwrite]] (stage, then swap, with crash
+    * roll-back). An Observation on the write records the new max vehicle_id
+    * (fresh ids are assigned above the old global max, so max(prevMax, max
+    * over merged) is the table's new high-water mark) — the NEXT
+    * incremental load skips its max-id scan entirely. */
   private[graft] def writeVehicleDim(wh: Warehouse, merged: DataFrame,
                                      prevMax: Long): Unit = {
     val obs = org.apache.spark.sql.Observation()
-    wh.overwritePartitions("vehicle_dim",
-      merged.observe(obs, max(col("vehicle_id")).as("m"))
-        .repartition(col("_bucket")), "_bucket",
-      alreadySnapped = true)
+    wh.overwrite("vehicle_dim", merged.observe(obs, max(col("vehicle_id")).as("m")))
     val m = Option(obs.get("m")).collect { case l: Long => l }.getOrElse(0L)
     wh.recordMaxId("vehicle_dim", math.max(prevMax, m))
   }

@@ -47,7 +47,8 @@ object StarLoad {
     * repeat load through the same [[Warehouse]] runs no schema-inference
     * job (schemas are remembered per table), appends only the dims that
     * gained rows (an unchanged dim keeps its cached frame and high-water
-    * mark), and lists vehicle_dim's bucket directories once. */
+    * mark), and republishes vehicle_dim whole as one unpartitioned table,
+    * so reading it back starts no file-listing job. */
   def run(wh: Warehouse, processed: DataFrame): Unit = {
     StateSeed.ensureSeeded(wh)
     val staging = stagedFrame(processed)
@@ -63,8 +64,8 @@ object StarLoad {
       // tail; every load step reads the cached frame, never the table
       val stagingWrite = Future(wh.overwrite("staging", staging))
       // the fact's vehicle resolution consumes the merged in-memory frame
-      // (sufficient for all currently-staged keys — see
-      // Facts.mergedVehicleDim) while the bucket write streams to disk
+      // (see Facts.mergedVehicleDim) while the vehicle_dim rewrite streams
+      // to disk
       val (mergedVehicle, prevMax) = Facts.mergedVehicleDim(wh, staging)
       val vehicleWrite = Future(Facts.writeVehicleDim(wh, mergedVehicle, prevMax))
       Facts.insertAuctionFact(wh, staging, Some(mergedVehicle))

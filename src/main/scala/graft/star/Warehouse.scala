@@ -8,7 +8,7 @@ import graft.util.TableDir
 /** Parquet-backed warehouse: one directory per table under `dir`. Stands in
   * for the reference's Postgres schema (no JDBC target in this harness —
   * SURVEY.md §2.1 S6). Overwrites stage through a temp dir + rename so a
-  * table can be rebuilt from a plan that reads it (the U2 merge case).
+  * table can be rebuilt from a plan that reads it (vehicle_dim's U2 merge).
   */
 final class Warehouse(val spark: SparkSession, val dir: String) {
 
@@ -28,12 +28,12 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
       (TableDir.rollBack(fs, p, staged(table), aside(table)) && TableDir.holdsData(fs, p))
   }
 
-  // Table schemas as first inferred: every `spark.read.parquet` without a
-  // schema runs a one-task footer-inference job, and a star load reads its
-  // tables ~13 times. Appends and partition overwrites keep the columns, so
-  // they keep the entry; a full `overwrite` may change them and drops it.
-  // Per instance: a rewrite through another Warehouse on the same dir is
-  // not seen.
+  // Table schemas as first inferred or last written: every
+  // `spark.read.parquet` without a schema runs a one-task footer-inference
+  // job, and a star load reads its tables ~13 times. Appends and partition
+  // overwrites keep the columns, so they keep the entry; a full `overwrite`
+  // records the schema it wrote. Per instance: a rewrite through another
+  // Warehouse on the same dir is not seen.
   private val schemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
 
   /** Reads `table`, passing its remembered schema after the first read. */
@@ -142,7 +142,9 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
   /** Full rewrite via a staged dir and [[TableDir.publish]] (safe when `df`'s
     * plan reads the table being replaced): the no-table window is two
     * metadata renames, not a recursive delete, and a crash mid-swap leaves
-    * the previous data at `.<table>_old`, where [[exists]] rolls it back. */
+    * the previous data at `.<table>_old`, where [[exists]] rolls it back.
+    * Remembers `df`'s schema as Parquet reads it back (every column
+    * nullable), so the next [[read]] infers nothing. */
   def overwrite(table: String, df: DataFrame): Unit =
     overwriteWithProbe(table, df, _ => ())
 
@@ -155,9 +157,9 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     df.write.mode(SaveMode.Overwrite).parquet(staged(table).toString)
     probe("staged")
     TableDir.publish(fs, path(table), staged(table), aside(table))
-    Seq("swapped", "cleaned").foreach(probe)
-    schemas.remove(table)
+    schemas.put(table, df.schema.toNullable)
     invalidate(table)
+    Seq("swapped", "cleaned").foreach(probe)
   }
 
   /** Rewrite ONLY the partitions present in `df` (dynamic partition
@@ -166,10 +168,8 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     * read the target table itself: lineage is cut with an eager
     * `localCheckpoint` (executor-local blocks) instead of a staging-dir
     * round-trip, so the merged data is written to the table exactly once. */
-  def overwritePartitions(table: String, df: DataFrame, partitionCol: String,
-                          alreadySnapped: Boolean = false): Unit = {
-    val snapped = if (alreadySnapped) df else df.localCheckpoint()
-    snapped.write.mode(SaveMode.Overwrite)
+  def overwritePartitions(table: String, df: DataFrame, partitionCol: String): Unit = {
+    df.localCheckpoint().write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(path(table).toString)

@@ -1,7 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.SparkSession
-import graft.etl.{Flatten, MergeWrite, Silver, Validate}
+import graft.etl.{Flatten, MergeWrite, Silver}
 import graft.star.{StarLoad, Warehouse}
 
 /** §2.9: the reference's file-arrival micro-batches (S3 ObjectCreated → one

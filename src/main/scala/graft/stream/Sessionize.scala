@@ -176,10 +176,11 @@ object Sessionize {
     }
   }
 
-  /** Number of hash buckets the sessions table is partitioned into on disk —
-    * the vehicle_dim keyed-upsert shape ([[graft.star.Facts]]) applied to
-    * the streaming sink: a user's bucket is a pure function of user_id, so
-    * each micro-batch reads and rewrites only the buckets its users fall in. */
+  /** Number of hash buckets the sessions table is partitioned into on disk:
+    * a user's bucket is a pure function of user_id, so each micro-batch
+    * reads and rewrites only the buckets its users fall in. (vehicle_dim
+    * is one table instead: a star-load batch touches every one of 64
+    * buckets, see [[graft.star.Facts.mergedVehicleDim]].) */
   val SessionBuckets = 64
 
   private def sessionBucket(userId: Column): Column =

@@ -38,7 +38,7 @@ object StreamingHll {
     val hashed = FileStream.parquet(spark, tableDir, maxFilesPerTrigger).select(
       coalesce(col(groupCol).cast("string"), lit(Sketch.NullGroup)).as(groupCol),
       Sketch.hllHash(col(valueCol)).as("_h"))
-    val regs = Sketch.hllRanked(hashed, groupCol)
+    val regs = Sketch.hllRanked(hashed)
       .groupBy(col(groupCol), col("_bucket"))
       .agg(max(col("_rho")).as("_rho"))
     // complete mode: bounded key space, the state IS the sketch

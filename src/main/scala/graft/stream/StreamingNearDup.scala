@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.ext.Dedup
 
+import scala.annotation.unused
+
 /** Streaming NEAR-dup ingest — the streaming twin of the batch cross-corpus
   * LSH operator ([[graft.ext.Dedup.crossCorpusCandidates]], q90): every new
   * crawl micro-batch is checked against ALL prior batches' MinHash
@@ -41,7 +43,7 @@ object StreamingNearDup {
   /** Per-band pairing against prior-batch members. `stateTtlMs` must be the
     * millisecond equivalent of `watermarkDelay`. */
   private def pairFn(stateTtlMs: Long)(
-      band: String, rows: Iterator[Row],
+      @unused band: String, rows: Iterator[Row],
       state: GroupState[Seq[Long]]): Iterator[(Long, Long)] = {
     if (state.hasTimedOut) {
       state.remove()

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.ext.Dedup
 
+import scala.annotation.unused
+
 /** Streaming paragraph dedup — the streaming twin of the batch CCNet-style
   * block dedup ([[graft.ext.Dedup.paragraphDedup]], q177): documents arrive
   * in micro-batches, every 20-word block is checked against per-block-hash
@@ -38,7 +40,7 @@ object StreamingParagraphDedup {
 
   /** Keep-first per block hash. State = the reigning (doc, bi) keeper. */
   private def keepFn(stateTtlMs: Long)(
-      hash: String, rows: Iterator[Row],
+      @unused hash: String, rows: Iterator[Row],
       state: GroupState[(Long, Long)]): Iterator[(Long, Long, String, Boolean)] = {
     if (state.hasTimedOut) {
       state.remove()

@@ -65,7 +65,7 @@ class ExtSpec extends AnyFunSuite {
     val p = Dedup.jaccardPairs(docs, "doc_id", "text", shingleN = 3, maxId = 100L, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(5)))
     assert(p.exists { case (a, b, j) => a == 1L && b == 2L && j > 0.5 })
-    assert(!p.exists { case (a, b, _) => b == 3L })
+    assert(!p.exists { case (_, b, _) => b == 3L })
   }
 
   test("prefix-filtered jaccard join == brute-force pairs (zero false negatives)") {
@@ -1454,7 +1454,6 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("shared-span stats ≡ brute-force longest common token run + match count") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // deterministic corpus with planted repeats, duplicate tokens (the
     // multi-diagonal case) and runs at unaligned offsets
@@ -1488,7 +1487,6 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("removeSharedSpans: later doc loses the UNION of covered spans; first copy survives") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -1564,7 +1562,7 @@ class ExtSpec extends AnyFunSuite {
       "x htith", "zz zed").zipWithIndex.map { case (n, i) => (i.toLong, n) }
       .toDF("id", "name").repartition(3)
     def pairs(key: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      Linkage.sortedNeighborPairs(names, "id", "name", window = 1,
+      Linkage.sortedNeighborPairs(names, "name", window = 1,
           maxDist = 2, sortKey = key)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
     val fwd = pairs(identity)

@@ -191,7 +191,7 @@ class GraphWalkSpec extends AnyFunSuite {
 
   test("generative fuzz: incremental relaxation over a random edge SPLIT " +
        "≡ from-scratch BFS of the union, on 6 random digraphs") {
-    import org.apache.spark.sql.functions.{col, lit, min => mincol}
+    import org.apache.spark.sql.functions.{col, min => mincol}
     val rnd = new scala.util.Random(23)
     for (c <- 1 to 6) {
       val nNodes = 6 + rnd.nextInt(20)

@@ -25,7 +25,7 @@ class HyperBallPackSpec extends AnyFunSuite {
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
     var regs = Sketch.hllRanked(
-        nodes.withColumn("_h", Sketch.hllHash(col("node"))), "node")
+        nodes.withColumn("_h", Sketch.hllHash(col("node"))))
       .select(col("node"), col("_bucket"), col("_rho"))
       .localCheckpoint()
     def est(r: Int, rg: DataFrame): DataFrame =

@@ -19,14 +19,19 @@ final case class JobCount(jobs: Seq[JobCount.Job]) {
 
 object JobCount {
   /** `finalStage`: the result stage's name, Spark's short call site
-    * (`<last Spark method> at <File>.scala:<line>`); `sparkMethod`: the
-    * first line of its long call site, the Spark frame the job came from
-    * (a read and a write both show `parquet at …` as the short name);
+    * (`<last Spark method> at <File>.scala:<line>`), or [[NoStages]] for a
+    * job over zero partitions, which Spark starts with no stage at all;
+    * `sparkMethod`: the first line of its long call site, the Spark frame
+    * the job came from (a read and a write both show `parquet at …` as the
+    * short name);
     * `sqlConf`: the `spark.sql.*` properties the job started with — the
     * session conf Spark SQL pinned for it (only keys set on the session,
     * not defaults; empty for jobs run outside Spark SQL). */
   final case class Job(finalStage: String, sparkMethod: String, description: String,
                        sqlConf: Map[String, String])
+
+  /** The `finalStage` of a job that has no stages. */
+  val NoStages = "<no stages>"
 
   private val GroupKey = "spark.jobGroup.id"
 
@@ -44,10 +49,11 @@ object JobCount {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val props = Option(js.properties)
         if (props.exists(_.getProperty(GroupKey) == group)) {
-          val last = js.stageInfos.maxBy(_.stageId)
+          val last = js.stageInfos.maxByOption(_.stageId)
           val sqlConf = props.toSeq.flatMap(_.stringPropertyNames.asScala)
             .filter(_.startsWith("spark.sql.")).map(k => k -> props.get.getProperty(k)).toMap
-          seen.put(js.jobId, Job(last.name, last.details.linesIterator.nextOption().getOrElse(""),
+          seen.put(js.jobId, Job(last.fold(NoStages)(_.name),
+            last.flatMap(_.details.linesIterator.nextOption()).getOrElse(""),
             props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""),
             sqlConf))
         }

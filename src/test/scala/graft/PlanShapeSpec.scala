@@ -335,7 +335,6 @@ class PlanShapeSpec extends AnyFunSuite {
     // every round's frames must read materialized blocks, not the detector:
     // a round plan referencing parquet or LSH means lineage grew — the exact
     // regression that OOM'd sf0.1 before the localCheckpoint fix
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("vec_a", "vec_b")
     val labels = graft.ext.Dedup.duplicateClusters(pairs, "vec_a", "vec_b")
@@ -740,7 +739,6 @@ class PlanShapeSpec extends AnyFunSuite {
     // the bounded-shuffle claim: the (group, bucket) register aggregation
     // must map-side combine (partial_max before the exchange), and no
     // window may appear anywhere in the sketch path
-    import org.apache.spark.sql.functions._
     val plan = graft.ext.Sketch.hllRollup(
         graft.util.Tables.load(spark, dir, "lineitem"),
         "l_returnflag", "l_partkey")

@@ -75,7 +75,7 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("duplicates never enter the sketch (value-distinct semantics)") {
-    val dup = ((1 to 1000).map(i => (0L, 42L)) ++ Seq((0L, 43L))).toDF("g", "v")
+    val dup = ((1 to 1000).map(_ => (0L, 42L)) ++ Seq((0L, 43L))).toDF("g", "v")
     val r = Sketch.kmvDistinct(dup, "g", "v", k = 8).collect().head
     assert(r.getAs[Long]("sketch_size") == 2L)
     assert(r.getAs[Long]("kmv_estimate") == 2L)

@@ -108,4 +108,17 @@ class WarehouseCacheSpec extends AnyFunSuite {
     assert(parts.filter(col("part") === 7).select("id").as[Long].collect().toSeq == Seq(2L))
     assert(parts.count() == 2L)
   }
+
+  test("overwrite remembers the schema Parquet reads back: the next read infers nothing") {
+    val dir = Files.createTempDirectory("graft_whowschema").toString
+    val wh = new Warehouse(spark, dir)
+    // non-nullable columns and a nested non-null element type: the file
+    // reads back with every level nullable
+    wh.overwrite("t", Seq((1L, "a", Seq(1, 2))).toDF("id", "k", "xs"))
+    val jobs = JobCount.during(spark)(wh.read("t"))
+    assert(jobs.schemaInferences.isEmpty, s"read after overwrite inferred: ${jobs.jobs}")
+    assert(wh.read("t").schema == spark.read.parquet(s"$dir/t").schema)
+    assert(wh.read("t").collect().map(r => (r.getLong(0), r.getString(1), r.getSeq[Int](2)))
+      .toSeq == Seq((1L, "a", Seq(1, 2))))
+  }
 }
