@@ -2,12 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import graft.etl.{Flatten, MergeWrite, Silver, Validate}
-import graft.star.{StarLoad, Warehouse}
+import graft.star.Warehouse
 import graft.stream.Incremental
 
 /** End-to-end auction pipeline driver: raw JSON (both envelope vintages) →
-  * bronze → validity split → silver → merged processed layer → star schema,
-  * then the streaming AvailableNow path over the same raw dir.
+  * bronze → validity split → silver → [[Pipeline.ingest]] (merged processed
+  * layer → star schema), then the streaming AvailableNow path over the same
+  * raw dir.
   *
   * Usage: runMain graft.AuctionPipelineDemo [rawDir] [workDir]
   * With no args, runs on a generated two-file fixture.
@@ -28,11 +29,9 @@ object AuctionPipelineDemo {
     // fixture's URL list) — the engine path ends at writeUrlList
     graft.sources.TextSources.writeUrlList(Validate.rescrapeUrls(bronze), s"$work/rescrape")
     val rescrape = spark.read.text(s"$work/rescrape").collect().map(_.getString(0)).sorted
-    val silver = Silver.run(bronze)
-    MergeWrite.mergeWrite(spark, s"$work/processed", silver)
-    val processed = MergeWrite.readProcessed(spark, s"$work/processed")
     val wh = new Warehouse(spark, s"$work/warehouse")
-    StarLoad.run(wh, processed.drop(MergeWrite.PartitionCol))
+    Pipeline.ingest(wh, s"$work/processed", Silver.run(bronze))
+    val processed = MergeWrite.readProcessed(spark, s"$work/processed")
 
     println(s"bronze_records=${bronze.count()}")
     println(s"rescrape_urls=${rescrape.mkString(",")}")

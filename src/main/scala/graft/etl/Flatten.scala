@@ -13,17 +13,13 @@ import graft.schema.Schemas
   */
 object Flatten {
 
-  /** P1: read raw auction JSON handling BOTH envelope vintages per file —
-    * map `{url → record}` and list `[record]` — in one pass: wholetext read,
-    * branch on the first character, explode to (url_key, record) rows.
-    * For the map envelope the key wins over the record's own auction_url
-    * (reference `url if url else auction.get('auction_url')`, T:71). */
-  def readRaw(spark: SparkSession, path: String): DataFrame =
-    parseEnvelopes(spark.read.option("wholetext", "true").text(path))
-
-  /** Envelope dispatch over a wholetext frame (one row per file, column
-    * `value`) — also the foreachBatch entry for the streaming path. */
-  def parseEnvelopes(txt: DataFrame): DataFrame = {
+  /** P1: raw auction JSON handling BOTH envelope vintages per file — map
+    * `{url → record}` and list `[record]` — in one pass over a wholetext
+    * frame (one row per file, column `value`): branch on the first
+    * character, explode to (url_key, record) rows. For the map envelope the
+    * key wins over the record's own auction_url (reference
+    * `url if url else auction.get('auction_url')`, T:71). */
+  private def parseEnvelopes(txt: DataFrame): DataFrame = {
     val rec = Schemas.rawRecord
     val asList = from_json(col("value"), ArrayType(rec))
     val asMap = from_json(col("value"), MapType(StringType, rec))
@@ -43,7 +39,7 @@ object Flatten {
     * `service_history` alias (T:76-83), default `auction_videos` to []
     * (T:75). The record's nested `auction_url` is replaced by the envelope-
     * resolved one. */
-  def flatten(raw: DataFrame): DataFrame =
+  private def flatten(raw: DataFrame): DataFrame =
     raw.select(
       col("auction_url"),
       col("rec.auction_title").as("auction_title"),
@@ -73,10 +69,15 @@ object Flatten {
       col("rec.auction_stats.bids").as("bids"))
 
   /** P4 (T:105-108): lowercase column names, spaces → underscores. */
-  def normalizeNames(df: DataFrame): DataFrame =
+  private def normalizeNames(df: DataFrame): DataFrame =
     df.toDF(df.columns.toIndexedSeq.map(_.toLowerCase.replace(" ", "_")): _*)
 
-  /** P1∘P2∘P3∘P4 — raw file(s) to the flat bronze frame. */
+  /** P1∘P2∘P3∘P4 — a wholetext frame to the flat bronze frame; the
+    * stream path's foreachBatch entry. */
+  def bronze(txt: DataFrame): DataFrame =
+    normalizeNames(flatten(parseEnvelopes(txt)))
+
+  /** [[bronze]] over the raw file(s) at `path`. */
   def bronze(spark: SparkSession, path: String): DataFrame =
-    normalizeNames(flatten(readRaw(spark, path)))
+    bronze(spark.read.option("wholetext", "true").text(path))
 }

@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.sql.Date
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,7 +31,12 @@ object MergeWrite {
   val DefaultStagingTtlMs: Long = 3600L * 1000
 
   /** Merge `batch` (silver schema, with auction_date) into the
-    * date-partitioned Parquet table at `processedDir`.
+    * date-partitioned Parquet table at `processedDir`, and return the
+    * `auction_saving_date` partitions it rewrote: the batch's distinct
+    * dates (`None` for the null partition of an unparseable auction_date),
+    * gathered in one driver collect before the merge. [[inPartitions]] of
+    * them is also the static partition filter on the existing table's
+    * read, so only those partitions are read back.
     *
     * `durable` picks the lineage-cut strategy for the overwrite-what-you-
     * read problem (Spark cannot overwrite a path a plan is reading):
@@ -53,14 +59,13 @@ object MergeWrite {
     */
   def mergeWrite(spark: SparkSession, processedDir: String, batch: DataFrame,
                  durable: Boolean = false,
-                 stagingTtlMs: Long = DefaultStagingTtlMs): Unit = {
+                 stagingTtlMs: Long = DefaultStagingTtlMs): Seq[Option[Date]] = {
     val dated = batch.withColumn(PartitionCol, to_date(col("auction_date")))
+    val touched = dated.select(PartitionCol).distinct().collect()
+      .map(r => Option(r.getDate(0))).toSeq
     val merged =
       if (tableExists(spark, processedDir)) {
-        val affectedDates = dated.select(col(PartitionCol)).distinct()
-        val existing = spark.read.parquet(processedDir)
-          // partition-pruned semi join: only the batch's dates are re-read
-          .join(broadcast(affectedDates), Seq(PartitionCol), "left_semi")
+        val existing = readProcessed(spark, processedDir).filter(inPartitions(touched))
         // stable-sort parity: existing rows outrank new ones on date ties
         val tagged = existing.withColumn("_src_rank", lit(0))
           .unionByName(dated.withColumn("_src_rank", lit(1)), allowMissingColumns = true)
@@ -120,10 +125,19 @@ object MergeWrite {
       // affected partition is written to the table exactly once
       overwriteInto(merged.localCheckpoint())
     }
+    touched
   }
 
   def readProcessed(spark: SparkSession, processedDir: String): DataFrame =
     spark.read.parquet(processedDir)
+
+  /** Rows in the `dates` partitions of the processed layer, `None` naming
+    * the null partition (a plain `isin` never matches it, so a merge would
+    * overwrite that partition without reading back its rows). */
+  def inPartitions(dates: Seq[Option[Date]]): Column = {
+    val in = col(PartitionCol).isin(dates.flatten: _*)
+    if (dates.contains(None)) in || col(PartitionCol).isNull else in
+  }
 
   private def tableExists(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)

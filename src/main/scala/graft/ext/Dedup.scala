@@ -185,8 +185,8 @@ object Dedup {
     * are one map-side projection feeding both joins on the same `band`
     * key; a small shard broadcast-promotes under AQE, so the index is
     * never shuffled at all. Audit cost scales with |shard| + the index
-    * SCAN, never with re-banding the corpus (`graft.AuditCost` measures
-    * exactly this against the q90 shape). */
+    * SCAN, never with re-banding the corpus (NOTES keeps the measurement
+    * against the q90 shape). */
   def nearDupAgainstIndex(bandIndex: DataFrame, shard: DataFrame,
                           idCol: String, textCol: String,
                           numHashes: Int = 8, shingleN: Int = 3,

@@ -55,11 +55,11 @@ import scala.annotation.unused
   * surrogate resolution — all table contents, not just the fact join-back.
   *
   * Scale note: the fixture is fixture-sized by design — the SCALE story for
-  * this chain is the S5 merge path (PipelineSpec, DurableCost) and the q44/
+  * this chain is the S5 merge path (PipelineSpec, IngestSpec) and the q44/
   * q49 loads at testdata volume; these queries pin SEMANTICS. The plans are
   * the production ones: one wholetext scan, envelope explode, a single
   * window for A4, then the composed star load (fused dim passes, broadcast
-  * lookups, bucketed vehicle upsert).
+  * lookups, whole-table vehicle upsert).
   */
 object AuctionQueries {
 

@@ -124,7 +124,7 @@ object DedupQueries {
   /** q200 — arrival-time near-dup against the PERSISTED band index
     * ([[Dedup.nearDupAgainstIndex]], r15 verdict #6): even doc_ids are the
     * standing corpus whose `(id, band)` index was built once (here
-    * in-query for the oracle; `graft.AuditCost` measures the
+    * in-query for the oracle; NOTES keeps the measurement of the
     * parquet-persisted shape), odd ids the arriving shard. Output =
     * shard-vs-index candidates PLUS shard-internal pairs — exactly the
     * full re-band restricted to pairs touching the shard (the ExtSpec

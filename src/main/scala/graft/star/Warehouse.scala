@@ -149,9 +149,9 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     overwriteWithProbe(table, df, _ => ())
 
   /** [[overwrite]] with a step-boundary callback so specs can assert the
-    * table stays visible across the swap. `publish` also drops the aside
-    * copy, so "swapped" and "cleaned" both name the one post-publish point
-    * (WarehouseCacheSpec still expects three steps). */
+    * table stays visible across the swap: "staged" once the new data is
+    * written beside the table, "published" once [[TableDir.publish]] has
+    * swapped it in and dropped the aside copy. */
   private[graft] def overwriteWithProbe(table: String, df: DataFrame,
                                         probe: String => Unit): Unit = {
     df.write.mode(SaveMode.Overwrite).parquet(staged(table).toString)
@@ -159,7 +159,7 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     TableDir.publish(fs, path(table), staged(table), aside(table))
     schemas.put(table, df.schema.toNullable)
     invalidate(table)
-    Seq("swapped", "cleaned").foreach(probe)
+    probe("published")
   }
 
   /** Rewrite ONLY the partitions present in `df` (dynamic partition

@@ -113,7 +113,8 @@ class TableDirSpec extends AnyFunSuite {
 
   test("holdsData: partition dirs count, even _-prefixed ones; metadata does not") {
     val dir = Files.createTempDirectory("graft_tabledir_bucket")
-    // vehicle_dim's layout: one `_bucket=N` dir per hash bucket
+    // a hash-bucketed layout (Sessionize's sessions table): one
+    // `_bucket=N` dir per bucket
     Seq((1L, "a", 3)).toDF("id", "k", "_bucket")
       .write.partitionBy("_bucket").parquet(dir.resolve("v").toString)
     val wh = new Warehouse(spark, dir.toString)

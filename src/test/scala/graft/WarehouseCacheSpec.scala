@@ -48,10 +48,10 @@ class WarehouseCacheSpec extends AnyFunSuite {
     wh.overwriteWithProbe("t", Seq((2L, "new"), (3L, "new")).toDF("id", "k"),
       step => steps += ((step, wh.exists("t"), wh.read("t").count())))
 
-    assert(steps.map(_._1).toSeq == Seq("staged", "swapped", "cleaned"))
+    assert(steps.map(_._1).toSeq == Seq("staged", "published"))
     assert(steps.forall(_._2), s"table vanished at a step boundary: $steps")
     // old data readable until the swap, new data from the swap on
-    assert(steps.map(_._3).toSeq == Seq(1L, 2L, 2L))
+    assert(steps.map(_._3).toSeq == Seq(1L, 2L))
     // swap artifacts are cleaned up
     val leftovers = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("."))
     assert(leftovers.isEmpty, s"staging dirs left behind: ${leftovers.toSeq}")
