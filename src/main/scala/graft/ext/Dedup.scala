@@ -990,12 +990,12 @@ object Dedup {
     * label(label), path compression), so a diameter-d chain converges in
     * O(log d) rounds, not d.
     *
-    * Implementation is the ONE place this engine drops to the RDD API, and
-    * deliberately so: an iterative fixpoint wants a hash partitioner that
-    * SURVIVES ACROSS ROUNDS — edges are shuffled into place once, and every
-    * round's edge⋈label and label-update joins are then narrow
-    * (co-partitioned), leaving one real shuffle (the per-destination min)
-    * per propagation step. The Dataset twin of this loop (kept in git
+    * Implementation drops to the RDD API, as every iterative loop in
+    * [[Graph]] does, and deliberately so: an iterative fixpoint wants a
+    * hash partitioner that SURVIVES ACROSS ROUNDS — edges are shuffled
+    * into place once, and every round's edge⋈label and label-update joins
+    * are then narrow (co-partitioned), leaving one real shuffle (the
+    * per-destination min) per propagation step. The Dataset twin of this loop (kept in git
     * history) cannot express that: every round re-planned through Catalyst
     * behind an eager checkpoint (whose plan STATS must be stripped or
     * planning compounds exponentially — [[checkpointStripped]], still the
@@ -1041,20 +1041,17 @@ object Dedup {
       .rdd
       .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
     sym.localCheckpoint()
-    // SIZE-ADAPTIVE loop partitioning (guide §2.5, the r20 hyperBall
-    // pattern): a constant shuffle.partitions partitioner runs that many
-    // near-empty task waves per round at small pair graphs — profiled at
-    // q191: 3–4 stages/round × 32 tasks × ~50 ms run with ~20 ms cpu, over
+    // SIZE-ADAPTIVE loop partitioning (Graph.loopPartitioner, the r20
+    // hyperBall pattern): a constant shuffle.partitions partitioner runs
+    // that many near-empty task waves per round at small pair graphs —
+    // profiled at q191: 3–4 stages/round × 32 tasks × ~50 ms run with ~20 ms cpu, over
     // 10+ rounds. Size from the materialized edge count (~64k rows per
     // partition, ceilinged at the session constant, so production confs
     // keep the old partitioner); the count doubles as the detector's one
     // materializing action, which round 1 previously paid anyway.
     // Matched A/B (q191/q201/q51, two steal-clean pairs): 9.27/9.32 s at
     // the constant vs 8.05/8.55 s sized — every query faster both pairs.
-    val confParts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val numParts = math.max(1L,
-      math.min(confParts.toLong, sym.count() / 65536L + 1L)).toInt
-    val p = new org.apache.spark.HashPartitioner(numParts)
+    val p = Graph.loopPartitioner(spark, Some(sym.count()))
     val edges = sym.partitionBy(p)
     edges.localCheckpoint()
     // start from least(own id, min neighbour) — same first hop as the DF twin

@@ -1,6 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import scala.reflect.ClassTag
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph-centrality over an edge list — the numeric-fixpoint
@@ -9,83 +12,128 @@ import org.apache.spark.sql.functions._
   * other spelling of this page point at?) so canonical-selection can keep
   * the most central copy instead of min-id.
   *
-  * All arithmetic is INTEGER fixed-point (ranks scaled by `scale`, damping
-  * as a percentage, `div` floor division): floating-point summation order
-  * differs run-to-run and engine-to-engine, but BIGINT arithmetic is exact
-  * everywhere, so DuckDB replays the fixpoint bit-identically with an
-  * unrolled CTE chain. Mass lost to integer floors is deterministic and
-  * identical in both engines — this is a ranking, not a probability
-  * distribution.
+  * All arithmetic is INTEGER fixed-point (ranks scaled by 10¹², damping
+  * 85 %, `div` floor division — fixed constants, not parameters):
+  * floating-point summation order differs run-to-run and
+  * engine-to-engine, but BIGINT arithmetic is exact everywhere, so DuckDB
+  * replays the fixpoint bit-identically with an unrolled CTE chain. Mass
+  * lost to integer floors is deterministic and identical in both engines
+  * — this is a ranking, not a probability distribution.
   *
-  * Scale shape per iteration: two narrow (co-partitioned) joins plus one
-  * map-side-combinable sum by destination — edges, degrees, and ranks all
-  * ride one hash partitioner shuffled into place once, the same loop shape
-  * as [[Dedup.duplicateClusters]] (see its Scaladoc for why the RDD API is
-  * the right tier for iterative fixpoints).
+  * Every loop here and [[Dedup.duplicateClusters]] run on the RDD tier
+  * (see its Scaladoc for why the RDD API is the right tier for iterative
+  * fixpoints): edges and state ride one hash partitioner from
+  * [[loopPartitioner]], shuffled into place once, so each round's joins
+  * are narrow. The four rank operators are one loop, [[rankRounds]].
   */
 object Graph {
 
-  /** `iterations` rounds of damped PageRank over a DIRECTED edge list
-    * (`srcCol`, `dstCol`). Every node must appear as a source at least once
-    * (true for symmetric graphs like the near-dup pair graph); dangling-mass
-    * redistribution is deliberately out of scope and documented as such.
-    * Returns (node, rank) with rank on the fixed-point `scale`.
-    *
-    * Implementation shares [[Dedup.duplicateClusters]]'s rationale for
-    * dropping to the RDD API (the second and last numeric-loop site): one
-    * hash partitioner carries edges, out-degrees, and ranks across ALL
-    * iterations, so each round is two narrow joins plus exactly one real
-    * shuffle (the per-destination contribution sum) — and because
-    * convergence is a fixed `iterations` count, the loop needs NO
-    * intermediate actions at all: the whole fixpoint materializes in the
-    * consumer's single action. The Dataset twin (kept in git history)
-    * re-planned each round through Catalyst and needed stride checkpoints
-    * plus [[Dedup.checkpointStripped]] to keep planning O(1); here lineage
-    * is `iterations` narrow layers deep, which a periodic localCheckpoint
-    * bounds for large iteration counts.
-    *
-    * Arithmetic is UNCHANGED from the DF form and exact in both engines:
-    * ranks scaled by `scale`, damping as a percentage, floor division on
-    * non-negative longs (Scala `/` ≡ SQL `div` there), Long sums associate
-    * exactly — so the DuckDB unrolled-CTE oracle still replays the fixpoint
-    * bit-identically (WarehouseOpsSpec pins ≡ an in-memory reference). */
-  def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
-                  iterations: Int, dampingPct: Int = 85,
-                  scale: Long = 1000000000000L,
-                  checkpointEvery: Int = 8): DataFrame = {
-    require(scale % 100 == 0, "scale must be divisible by 100 for exact teleport mass")
-    val teleport = scale / 100 * (100 - dampingPct)
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val numParts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val p = new org.apache.spark.HashPartitioner(numParts)
-    // shuffle the edge list into the loop partitioning ONCE (keyed by src);
-    // the localCheckpoint materializes the (possibly expensive) detector
-    // plan exactly once — iterations read executor-local blocks
+  private val DampingPct = 85L
+  private val Scale = 1000000000000L
+  private val Teleport = Scale / 100 * (100 - DampingPct)
+  /** Rounds between lineage cuts of the rank loop. */
+  private val CheckpointEvery = 8
+
+  /** The RDD-tier loop partitioner: the session's `shuffle.partitions`,
+    * or — when the caller knows its loop's row count — ~64k rows per
+    * partition ceilinged at that constant (the DF form inherited AQE's
+    * coalescing of small shuffles; the RDD tier must size itself or every
+    * round pays that many near-empty tasks). */
+  private[ext] def loopPartitioner(spark: SparkSession,
+                                   rows: Option[Long] = None): HashPartitioner = {
+    val confParts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    new HashPartitioner(
+      rows.fold(confParts)(n => math.min(confParts.toLong, n / 65536L + 1L).toInt))
+  }
+
+  /** (src, dst) as longs, shuffled into the loop partitioning ONCE (keyed
+    * by src); the localCheckpoint materializes the (possibly expensive)
+    * detector plan exactly once — rounds read executor-local blocks. */
+  private def edgeRdd(edges: DataFrame, srcCol: String, dstCol: String,
+                      p: HashPartitioner): RDD[(Long, Long)] = {
+    import edges.sparkSession.implicits._
     val e = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
       .as[(Long, Long)].rdd.partitionBy(p)
     e.localCheckpoint()
-    val deg = e.mapValues(_ => 1L).reduceByKey(p, _ + _)
-    var rank = deg.mapPartitions(_.map { case (n, _) => (n, scale) },
-      preservesPartitioning = true)
-    for (i <- 1 to iterations) {
-      // share = rank div outdeg, sent along every out-edge; both joins are
-      // narrow (deg, rank, e all carry partitioner p on the source key)
-      val shares = deg.join(rank, p)
-        .mapPartitions(_.map { case (n, (d, r)) => (n, r / d) },
-          preservesPartitioning = true)
-      val contribs = e.join(shares, p)
-        .map { case (_, (dst, share)) => (dst, share) }
-        .reduceByKey(p, _ + _) // the round's one real shuffle
-      // nodes keep their row even with no inflow (teleport mass only);
-      // contributions to non-source nodes drop — same as the DF left join
-      rank = deg.leftOuterJoin(contribs, p)
-        .mapPartitions(_.map { case (n, (_, inf)) =>
-          (n, teleport + dampingPct * inf.getOrElse(0L) / 100)
-        }, preservesPartitioning = true)
-      if (i % checkpointEvery == 0 && i < iterations) rank.localCheckpoint()
+    e
+  }
+
+  /** The distinct seed ids as longs. */
+  private def seedRdd(seeds: DataFrame, seedCol: String): RDD[Long] = {
+    import seeds.sparkSession.implicits._
+    seeds.select(col(seedCol).cast("long")).distinct().as[Long].rdd
+  }
+
+  /** THE damped-rank fixpoint, shared by [[pageRankInt]],
+    * [[trustRankInt]], [[pageRankWeighted]] and [[trustRankResiduals]]:
+    * returns rank_0 … rank_`iterations` over the out-edges `e` (keyed by
+    * source, partitioned by `p`). `weight(edge)` sums to each source's
+    * out-weight W; `send(edge, r, W)` is the edge's (dst, contribution).
+    * `seeds` picks who starts at `Scale` and receives teleport mass (None:
+    * every source); everyone else starts and teleports at 0.
+    *
+    * One hash partitioner carries edges, (W, teleport) and ranks across
+    * ALL rounds, so each round is two narrow joins plus exactly one real
+    * shuffle (the per-destination contribution sum) — and because
+    * convergence is a fixed round count, the loop needs NO intermediate
+    * actions: the whole fixpoint materializes in the consumer's single
+    * action. Lineage is one narrow layer per round, cut every
+    * `CheckpointEvery` rounds. Only sources hold rank: a node keeps its
+    * row with no inflow (teleport mass only), and contributions to
+    * non-source nodes drop.
+    *
+    * Arithmetic is exact in both engines: floor division on non-negative
+    * longs (Scala `/` ≡ SQL `div` there), Long sums associate exactly —
+    * so the DuckDB unrolled-CTE oracle replays every iterate
+    * bit-identically. */
+  private def rankRounds[E: ClassTag](e: RDD[(Long, E)], p: HashPartitioner,
+                                      weight: E => Long,
+                                      send: (E, Long, Long) => (Long, Long),
+                                      seeds: Option[RDD[Long]],
+                                      iterations: Int): Seq[RDD[(Long, Long)]] = {
+    val w = e.mapValues(weight).reduceByKey(p, _ + _)
+    // per-node (W, teleport): constant across rounds — materialize once
+    val base = seeds.fold(w.mapValues((_, Teleport))) { s =>
+      w.leftOuterJoin(s.map((_, ())), p)
+        .mapValues { case (bigW, seed) => (bigW, if (seed.isDefined) Teleport else 0L) }
     }
-    rank.toDF("node", "rank")
+    base.localCheckpoint()
+    val rank0 = base.mapValues { case (_, t) => if (t > 0) Scale else 0L }
+    (1 to iterations).scanLeft(rank0) { (rank, i) =>
+      // both joins are narrow (base, rank, e all carry p on the source key)
+      val contribs = e.join(base.join(rank, p), p)
+        .map { case (_, (edge, ((bigW, _), r))) => send(edge, r, bigW) }
+        .reduceByKey(p, _ + _) // the round's one real shuffle
+      val next = base.leftOuterJoin(contribs, p).mapValues {
+        case ((_, t), inf) => t + DampingPct * inf.getOrElse(0L) / 100 }
+      if (i % CheckpointEvery == 0 && i < iterations) next.localCheckpoint()
+      next
+    }
+  }
+
+  /** [[rankRounds]] over plain (src, dst) link edges: a node's rank splits
+    * evenly over its out-edges (share = rank div outdeg; a duplicate edge
+    * counts once per occurrence). */
+  private def linkRanks(edges: DataFrame, srcCol: String, dstCol: String,
+                        p: HashPartitioner, seeds: Option[RDD[Long]],
+                        iterations: Int): Seq[RDD[(Long, Long)]] =
+    rankRounds[Long](edgeRdd(edges, srcCol, dstCol, p), p, _ => 1L,
+      (dst, r, outdeg) => (dst, r / outdeg), seeds, iterations)
+
+  /** `iterations` rounds of damped PageRank over a DIRECTED edge list
+    * (`srcCol`, `dstCol`): [[linkRanks]] with every source seeded. Every
+    * node must appear as a source at least once (true for symmetric graphs
+    * like the near-dup pair graph); dangling-mass redistribution is
+    * deliberately out of scope and documented as such. Returns (node,
+    * rank) on the fixed-point scale. The Dataset twin (kept in git
+    * history) re-planned each round through Catalyst and needed stride
+    * checkpoints plus [[Dedup.checkpointStripped]] to keep planning O(1);
+    * WarehouseOpsSpec pins this loop ≡ an in-memory reference. */
+  def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
+                  iterations: Int): DataFrame = {
+    import edges.sparkSession.implicits._
+    val p = loopPartitioner(edges.sparkSession)
+    linkRanks(edges, srcCol, dstCol, p, None, iterations).last.toDF("node", "rank")
   }
 
   /** Multi-source BFS crawl depth over a DIRECTED edge list: the minimum
@@ -95,13 +143,13 @@ object Graph {
     * OPIC/TrustRank-era crawl ordering and URL-depth gates are the same
     * signal). The THIRD loop shape next to the label-propagation fixpoint
     * ([[Dedup.duplicateClusters]]) and the numeric fixpoint
-    * ([[pageRankInt]]): a MONOTONE FRONTIER loop — per round, messages
+    * ([[rankRounds]]): a MONOTONE FRONTIER loop — per round, messages
     * flow only from nodes assigned LAST round (the frontier), never the
     * whole node set, so total message volume across the entire run is
     * O(edges): each edge fires exactly once, the round its source enters
     * the frontier.
     *
-    * Same RDD-tier rationale as [[pageRankInt]]: one hash partitioner
+    * Same RDD-tier rationale as [[rankRounds]]: one hash partitioner
     * carries edges, depths, and frontiers across all rounds (the
     * edge⋈frontier and message⋈depth joins are narrow); the per-round
     * shuffle is the message reduceByKey. The round count is FIXED at
@@ -122,13 +170,9 @@ object Graph {
                seeds: DataFrame, seedCol: String, maxDepth: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val numParts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val p = new org.apache.spark.HashPartitioner(numParts)
-    val e = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .as[(Long, Long)].rdd.partitionBy(p)
-    e.localCheckpoint()
-    val seed = seeds.select(col(seedCol).cast("long")).distinct()
-      .as[Long].rdd.map((_, 0L)).partitionBy(p)
+    val p = loopPartitioner(spark)
+    val e = edgeRdd(edges, srcCol, dstCol, p)
+    val seed = seedRdd(seeds, seedCol).map((_, 0L)).partitionBy(p)
     seed.localCheckpoint()
     var depth = seed
     var frontier = seed
@@ -200,7 +244,7 @@ object Graph {
     * distance r — harmonic centrality is Σ_r (|B_r|−|B_{r−1}|)/r (on the
     * transpose graph), closeness is the analogous weighted sum.
     *
-    * Same RDD-tier rationale as [[pageRankInt]]/[[bfsDepth]]: one hash
+    * Same RDD-tier rationale as [[rankRounds]]/[[bfsDepth]]: one hash
     * partitioner carries edges (keyed by HEAD — round r pulls B_{r−1}(w)
     * back along each edge (v,w)) and register state across all rounds,
     * so each round is ONE map-side-combined reduceByKey shuffle of
@@ -222,17 +266,12 @@ object Graph {
     // both the loop's edge RDD and the node universe derive from it
     val eDf = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).localCheckpoint()
-    // SIZE-ADAPTIVE loop partitioning (guide §2.5): the DF form inherited
-    // AQE's coalescing of sub-MB register shuffles; the RDD tier must
-    // derive it itself or every round pays numParts near-empty tasks.
-    // ~64k message rows per partition, ceilinged at the session's
-    // shuffle.partitions — at production confs this IS the old constant,
-    // at small inputs it collapses the scheduling overhead exactly like
-    // AQE did (the count is a cheap action over the checkpointed blocks).
-    val confParts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val numParts = math.max(1L,
-      math.min(confParts.toLong, eDf.count() / 65536L + 1L)).toInt
-    val p = new org.apache.spark.HashPartitioner(numParts)
+    // SIZE-ADAPTIVE loop partitioning: the DF form inherited AQE's
+    // coalescing of sub-MB register shuffles; at production confs this IS
+    // the session constant, at small inputs it collapses the scheduling
+    // overhead exactly like AQE did (the count is a cheap action over the
+    // checkpointed blocks)
+    val p = loopPartitioner(spark, Some(eDf.count()))
     val e = eDf.select(col("dst"), col("src")).as[(Long, Long)].rdd
       .partitionBy(p)
     e.localCheckpoint()
@@ -256,7 +295,7 @@ object Graph {
     // sc.union of the radius+1 row-sets is partitioner-AWARE: one output
     // partition per loop partition reading all rounds' blocks, instead of
     // (radius+1)·numParts tiny tasks feeding the consumer
-    def est(r: Long, rg: org.apache.spark.rdd.RDD[(Long, Array[Byte])]) =
+    def est(r: Long, rg: RDD[(Long, Array[Byte])]) =
       rg.mapPartitions(_.map { case (n, a) =>
         var i = 0; var zeros = 0L; var zs = 0L
         while (i < a.length) {
@@ -286,62 +325,28 @@ object Graph {
 
   /** Seed-personalized damped PageRank — TrustRank (Gyöngyi,
     * Garcia-Molina & Pedersen, "Combating Web Spam with TrustRank",
-    * VLDB 2004): the [[pageRankInt]] loop with the teleport vector
+    * VLDB 2004): the [[linkRanks]] loop with the teleport vector
     * restricted to a trusted SEED set, so rank mass can only enter the
     * graph at vetted pages and decays multiplicatively with link
     * distance from them — the spam-demotion signal crawl schedulers pair
     * with the BFS depth gate ([[bfsDepth]] measures hops from the seeds;
     * this measures attenuated endorsement). Per-seed teleport is the
-    * constant `(100−dampingPct)·scale/100` (unnormalized — this is a
-    * ranking; normalizing by |seeds| would only rescale every value).
+    * constant 15 % of the scale (unnormalized — this is a ranking;
+    * normalizing by |seeds| would only rescale every value).
     * Non-seed nodes start and teleport at 0, so a node unreachable from
     * the seed set holds rank EXACTLY 0 — integer arithmetic makes the
     * untrusted tail exact, not epsilon-noise.
     *
-    * Same loop shape, arithmetic, and RDD-tier rationale as
-    * [[pageRankInt]] (one partitioner, two narrow joins + one shuffle per
-    * round, fixed iteration count, no intermediate actions); the oracle
-    * replays it with an unrolled CTE chain whose teleport term is a seed
-    * CASE. Nodes must appear as a source to hold rank (same contract). */
+    * The oracle replays it with an unrolled CTE chain whose teleport
+    * term is a seed CASE. Nodes must appear as a source to hold rank (the
+    * [[rankRounds]] contract). */
   def trustRankInt(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, seedCol: String,
-                   iterations: Int, dampingPct: Int = 85,
-                   scale: Long = 1000000000000L,
-                   checkpointEvery: Int = 8): DataFrame = {
-    require(scale % 100 == 0, "scale must be divisible by 100 for exact teleport mass")
-    val teleport = scale / 100 * (100 - dampingPct)
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val numParts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val p = new org.apache.spark.HashPartitioner(numParts)
-    val e = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .as[(Long, Long)].rdd.partitionBy(p)
-    e.localCheckpoint()
-    val seed = seeds.select(col(seedCol).cast("long")).distinct()
-      .as[Long].rdd.map((_, ())).partitionBy(p)
-    val deg = e.mapValues(_ => 1L).reduceByKey(p, _ + _)
-    // per-node teleport base: constant across rounds — materialize once
-    val base = deg.leftOuterJoin(seed, p).mapPartitions(
-      _.map { case (n, (d, s)) => (n, (d, if (s.isDefined) teleport else 0L)) },
-      preservesPartitioning = true)
-    base.localCheckpoint()
-    var rank = base.mapPartitions(
-      _.map { case (n, (_, t)) => (n, if (t > 0) scale else 0L) },
-      preservesPartitioning = true)
-    for (i <- 1 to iterations) {
-      val shares = base.join(rank, p)
-        .mapPartitions(_.map { case (n, ((d, _), r)) => (n, r / d) },
-          preservesPartitioning = true)
-      val contribs = e.join(shares, p)
-        .map { case (_, (dst, share)) => (dst, share) }
-        .reduceByKey(p, _ + _) // the round's one real shuffle
-      rank = base.leftOuterJoin(contribs, p)
-        .mapPartitions(_.map { case (n, ((_, t), inf)) =>
-          (n, t + dampingPct * inf.getOrElse(0L) / 100)
-        }, preservesPartitioning = true)
-      if (i % checkpointEvery == 0 && i < iterations) rank.localCheckpoint()
-    }
-    rank.toDF("node", "trust")
+                   iterations: Int): DataFrame = {
+    import edges.sparkSession.implicits._
+    val p = loopPartitioner(edges.sparkSession)
+    linkRanks(edges, srcCol, dstCol, p, Some(seedRdd(seeds, seedCol)), iterations)
+      .last.toDF("node", "trust")
   }
 
   /** Monotone RELAXATION from an arbitrary frontier — the GENERAL form
@@ -370,11 +375,8 @@ object Graph {
                maxRounds: Int, maxDepth: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val numParts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val p = new org.apache.spark.HashPartitioner(numParts)
-    val e = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .as[(Long, Long)].rdd.partitionBy(p)
-    e.localCheckpoint()
+    val p = loopPartitioner(spark)
+    val e = edgeRdd(edges, srcCol, dstCol, p)
     var depth = init.select(col("node").cast("long"), col("depth").cast("long"))
       .as[(Long, Long)].rdd.reduceByKey(p, math.min(_: Long, _: Long))
     depth.localCheckpoint()
@@ -417,40 +419,18 @@ object Graph {
     * `r·w // W` — two spellings, one exact value, which is itself a
     * cross-check of the identity on every edge of every round.
     *
-    * Loop shape, arithmetic discipline, and RDD-tier rationale are
-    * [[pageRankInt]]'s (one partitioner, narrow joins, one shuffle per
-    * round, fixed iterations, zero intermediate actions). */
+    * The loop is [[rankRounds]] over (dst, w) edges. */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-                       wCol: String, iterations: Int, dampingPct: Int = 85,
-                       scale: Long = 1000000000000L,
-                       checkpointEvery: Int = 8): DataFrame = {
-    require(scale % 100 == 0, "scale must be divisible by 100 for exact teleport mass")
-    val teleport = scale / 100 * (100 - dampingPct)
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val numParts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val p = new org.apache.spark.HashPartitioner(numParts)
+                       wCol: String, iterations: Int): DataFrame = {
+    import edges.sparkSession.implicits._
+    val p = loopPartitioner(edges.sparkSession)
     val e = edges.select(col(srcCol).cast("long"), struct(col(dstCol).cast("long"),
         col(wCol).cast("long"))).as[(Long, (Long, Long))].rdd.partitionBy(p)
     e.localCheckpoint()
-    val tw = e.mapValues(_._2).reduceByKey(p, _ + _)
-    var rank = tw.mapPartitions(_.map { case (n, _) => (n, scale) },
-      preservesPartitioning = true)
-    for (i <- 1 to iterations) {
-      val rw = tw.join(rank, p) // narrow: (node, (W, r))
-      val contribs = e.join(rw, p)
-        .map { case (_, ((dst, w), (bigW, r))) =>
-          // exact ⌊r·w/W⌋ without the 128-bit product (identity above)
-          (dst, (r / bigW) * w + (r % bigW) * w / bigW)
-        }
-        .reduceByKey(p, _ + _) // the round's one real shuffle
-      rank = tw.leftOuterJoin(contribs, p)
-        .mapPartitions(_.map { case (n, (_, inf)) =>
-          (n, teleport + dampingPct * inf.getOrElse(0L) / 100)
-        }, preservesPartitioning = true)
-      if (i % checkpointEvery == 0 && i < iterations) rank.localCheckpoint()
-    }
-    rank.toDF("node", "rank")
+    rankRounds[(Long, Long)](e, p, _._2, {
+      // exact ⌊r·w/W⌋ without the 128-bit product (identity above)
+      case ((dst, w), r, bigW) => (dst, (r / bigW) * w + (r % bigW) * w / bigW)
+    }, None, iterations).last.toDF("node", "rank")
   }
 
   /** [[trustRankInt]] with the per-iteration CONVERGENCE RESIDUALS as the
@@ -458,56 +438,24 @@ object Graph {
     * committing a 100 TB job to k rounds, measure how fast the mass
     * actually settles (L1 delta, max per-node delta, and how many nodes
     * still move, per round). Exact integers end to end, so the residual
-    * curve is replayable data, not a float log line. Same loop; each
-    * round's new rank joins the previous narrowly (both carry the loop
-    * partitioner) and the |delta| rows from ALL rounds union into one
-    * frame — no intermediate actions, the consumer's single action
-    * materializes the whole curve (ranks are localCheckpoint-marked per
-    * round because each feeds two consumers: the next round and its
-    * delta). */
+    * curve is replayable data, not a float log line. Same loop
+    * ([[linkRanks]]); each iterate joins the previous narrowly (both
+    * carry the loop partitioner) and the |delta| rows from ALL rounds
+    * union into one frame — no intermediate actions, the consumer's
+    * single action materializes the whole curve (every iterate is
+    * localCheckpoint-marked because each feeds two consumers: the next
+    * round and its delta). */
   def trustRankResiduals(edges: DataFrame, srcCol: String, dstCol: String,
                          seeds: DataFrame, seedCol: String,
-                         iterations: Int, dampingPct: Int = 85,
-                         scale: Long = 1000000000000L): DataFrame = {
-    require(scale % 100 == 0, "scale must be divisible by 100 for exact teleport mass")
-    val teleport = scale / 100 * (100 - dampingPct)
+                         iterations: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val numParts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val p = new org.apache.spark.HashPartitioner(numParts)
-    val e = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .as[(Long, Long)].rdd.partitionBy(p)
-    e.localCheckpoint()
-    val seed = seeds.select(col(seedCol).cast("long")).distinct()
-      .as[Long].rdd.map((_, ())).partitionBy(p)
-    val deg = e.mapValues(_ => 1L).reduceByKey(p, _ + _)
-    val base = deg.leftOuterJoin(seed, p).mapPartitions(
-      _.map { case (n, (d, s)) => (n, (d, if (s.isDefined) teleport else 0L)) },
-      preservesPartitioning = true)
-    base.localCheckpoint()
-    var rank = base.mapPartitions(
-      _.map { case (n, (_, t)) => (n, if (t > 0) scale else 0L) },
-      preservesPartitioning = true)
-    rank.localCheckpoint()
-    var deltas = List.empty[org.apache.spark.rdd.RDD[(Int, Long)]]
-    for (i <- 1 to iterations) {
-      val shares = base.join(rank, p)
-        .mapPartitions(_.map { case (n, ((d, _), r)) => (n, r / d) },
-          preservesPartitioning = true)
-      val contribs = e.join(shares, p)
-        .map { case (_, (dst, share)) => (dst, share) }
-        .reduceByKey(p, _ + _)
-      val next = base.leftOuterJoin(contribs, p)
-        .mapPartitions(_.map { case (n, ((_, t), inf)) =>
-          (n, t + dampingPct * inf.getOrElse(0L) / 100)
-        }, preservesPartitioning = true)
-      next.localCheckpoint() // feeds the next round AND its delta row-set
-      deltas ::= next.join(rank, p).mapPartitions(
-        _.map { case (_, (nw, old)) => (i, math.abs(nw - old)) },
-        preservesPartitioning = false)
-      rank = next
-    }
-    spark.sparkContext.union(deltas.reverse)
+    val p = loopPartitioner(spark)
+    val ranks = linkRanks(edges, srcCol, dstCol, p, Some(seedRdd(seeds, seedCol)), iterations)
+    ranks.foreach(_.localCheckpoint())
+    val deltas = ranks.zip(ranks.tail).zipWithIndex.map { case ((old, nw), i) =>
+      nw.join(old, p).map { case (_, (n, o)) => (i + 1, math.abs(n - o)) } }
+    spark.sparkContext.union(deltas)
       .toDF("iteration", "abs_delta")
       .groupBy(col("iteration").cast("long").as("iteration"))
       .agg(sum(col("abs_delta")).as("l1_delta"),
@@ -541,48 +489,6 @@ object Graph {
     val nodes = e.select(col("a").as("v"))
       .unionByName(e.select(col("b").as("v"))).distinct()
       .agg(count(lit(1)).as("n_nodes"))
-    val edges = e.agg(count(lit(1)).as("n_edges"))
-    nodes.crossJoin(edges).crossJoin(tri)
-      .select(col("n_nodes"), col("n_edges"),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
-  }
-
-  /** [[triangleStats]] with TRUE degree ordering — the adversarial-graph
-    * form: every undirected edge is oriented from its lower-(degree, id)
-    * endpoint to its higher one, so a hub of degree d contributes out-wedges
-    * only for the (few) neighbours ranked above it, bounding any node's
-    * out-degree by O(√edges) (the compact-forward bound; Latapy 2008) where
-    * canonical-id orientation leaves a min-id hub with d²/2 wedges. Each
-    * triangle then has exactly ONE node with out-degree 2 in it (its
-    * order-minimum), so closing ordered out-pairs against the oriented edge
-    * set counts every triangle exactly once — no DISTINCT, same census.
-    *
-    * Same output as [[triangleStats]]: one (n_nodes, n_edges, n_triangles)
-    * row; the equivalence is property-tested on random graphs. Costs one
-    * extra degree aggregation + join over the pair graph — worth it exactly
-    * when the graph is hub-heavy. */
-  def triangleStatsDegreeOrdered(pairs: DataFrame, aCol: String,
-                                 bCol: String): DataFrame = {
-    val e = pairs.select(col(aCol).as("a"), col(bCol).as("b")).distinct()
-    val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-    val deg = sym.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
-    // (u → w) iff (deg u, u) < (deg w, w): a total order, so each
-    // undirected edge appears exactly once, tagged with its head's rank key
-    val or = sym
-      .join(deg.select(col("v").as("a"), col("deg").as("_da")), Seq("a"))
-      .join(deg.select(col("v").as("b"), col("deg").as("_db")), Seq("b"))
-      .filter(struct(col("_da"), col("a")) < struct(col("_db"), col("b")))
-      .select(col("a").as("u"), col("b").as("w"),
-        col("_db").as("dw"))
-    // ordered out-pairs of each source close against the oriented edge
-    // between the two heads (orientation agrees with the pair's order)
-    val tri = or.as("p").join(or.as("q"),
-        col("p.u") === col("q.u") &&
-          struct(col("p.dw"), col("p.w")) < struct(col("q.dw"), col("q.w")))
-      .select(col("p.w").as("x"), col("q.w").as("y"))
-      .join(or.as("r"), col("x") === col("r.u") && col("y") === col("r.w"))
-      .agg(count(lit(1)).as("n_triangles"))
-    val nodes = deg.agg(count(lit(1)).as("n_nodes"))
     val edges = e.agg(count(lit(1)).as("n_edges"))
     nodes.crossJoin(edges).crossJoin(tri)
       .select(col("n_nodes"), col("n_edges"),

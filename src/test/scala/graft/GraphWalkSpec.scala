@@ -139,6 +139,7 @@ class GraphWalkSpec extends AnyFunSuite {
         val outdeg = es.groupBy(_._1).view.mapValues(_.size.toLong).toMap
         var rank = sources.map(u =>
           u -> (if (seedSet.contains(u)) 1000000000000L else 0L)).toMap
+        val iterates = scala.collection.mutable.ArrayBuffer(rank)
         for (_ <- 1 to 4) {
           val inflow = scala.collection.mutable.Map.empty[Long, Long]
             .withDefaultValue(0L)
@@ -147,11 +148,22 @@ class GraphWalkSpec extends AnyFunSuite {
           rank = sources.map(u => u ->
             ((if (seedSet.contains(u)) 150000000000L else 0L)
               + 85L * inflow(u) / 100L)).toMap
+          iterates += rank
         }
         val gotT = Graph.trustRankInt(es.toDF("src", "dst"), "src", "dst",
             seedSet.toDF("doc_id"), "doc_id", 4)
           .as[(Long, Long)].collect().toMap
         assert(gotT == rank, s"trust case $c")
+        // the residual curve is the deltas of those same iterates:
+        // (iteration, L1, max, nodes that moved)
+        val wantR = (1 to 4).map { i =>
+          val d = sources.map(u => math.abs(iterates(i)(u) - iterates(i - 1)(u)))
+          (i.toLong, d.sum, d.max, d.count(_ > 0).toLong)
+        }.toSet
+        val gotR = Graph.trustRankResiduals(es.toDF("src", "dst"), "src", "dst",
+            seedSet.toDF("doc_id"), "doc_id", 4)
+          .as[(Long, Long, Long, Long)].collect().toSet
+        assert(gotR == wantR, s"residual case $c")
       }
     }
     assert(ran >= 8, s"non-vacuity: only $ran cases had seeds")
@@ -288,6 +300,35 @@ class GraphWalkSpec extends AnyFunSuite {
         when(col("dst") === 3L && col("src") === 1L, lit(99L)).otherwise(lit(1L))),
       "src", "dst", "w", 5).as[(Long, Long)].collect().toMap
     assert(tilt(3L) > flat(3L), "anchor-mass tilt must raise the favored target")
+  }
+
+  test("generative fuzz: pageRankWeighted ≡ an in-memory BigInt r·w div W " +
+       "fixpoint on 10 random weighted digraphs (dup edges, self-loops, " +
+       "weights up to 2^20)") {
+    val rnd = new scala.util.Random(97)
+    for (c <- 1 to 10) {
+      val nNodes = 3 + rnd.nextInt(20)
+      val es = Seq.fill(nNodes + rnd.nextInt(3 * nNodes))(
+        (rnd.nextInt(nNodes).toLong, rnd.nextInt(nNodes).toLong,
+          1L + rnd.nextInt(1 << 20)))
+      val iterations = 1 + rnd.nextInt(6)
+      // reference: the direct 128-bit floor ⌊r·w/W⌋ per edge occurrence;
+      // only sources hold rank, inflow to anyone else drops
+      val sources = es.map(_._1).distinct
+      val bigW = es.groupMapReduce(_._1)(_._3)(_ + _)
+      var rank = sources.map(_ -> 1000000000000L).toMap
+      for (_ <- 1 to iterations) {
+        val inflow = scala.collection.mutable.Map.empty[Long, Long]
+          .withDefaultValue(0L)
+        es.foreach { case (u, v, w) =>
+          inflow(v) += (BigInt(rank(u)) * w / bigW(u)).toLong }
+        rank = sources.map(u => u -> (150000000000L + 85L * inflow(u) / 100L)).toMap
+      }
+      val got = Graph.pageRankWeighted(es.toDF("src", "dst", "w"),
+          "src", "dst", "w", iterations)
+        .as[(Long, Long)].collect().toMap
+      assert(got == rank, s"case $c: iterations $iterations edges $es")
+    }
   }
 
   test("hyperBall: radius 0 sketches the singleton; radius widens balls " +

@@ -76,11 +76,10 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
-  test("triangle census: degree-ordered orientation ≡ canonical-id orientation ≡ brute force") {
-    // the hub-safe degree ordering must count the same census as the
-    // canonical orientation on arbitrary graphs (hubs, chains, cliques
-    // included by generation) — and both must match a driver-side
-    // enumeration over the adjacency sets
+  test("triangle census: canonical-id orientation ≡ brute force") {
+    // the canonical orientation must count the census of a driver-side
+    // enumeration over the adjacency sets on arbitrary graphs (hubs,
+    // chains, cliques included by generation)
     val edgeGen = for {
       a <- Gen.choose(0L, 14L)
       b <- Gen.choose(0L, 14L)
@@ -101,9 +100,7 @@ class PropertySpec extends AnyFunSuite {
           val r = df.collect().head
           (r.getLong(0), r.getLong(1), r.getLong(2))
         }
-        val canonical = census(graft.ext.Graph.triangleStats(pairs, "vec_a", "vec_b"))
-        val ordered = census(graft.ext.Graph.triangleStatsDegreeOrdered(pairs, "vec_a", "vec_b"))
-        canonical == ordered && ordered._3 == want
+        census(graft.ext.Graph.triangleStats(pairs, "vec_a", "vec_b"))._3 == want
       }
     })
   }

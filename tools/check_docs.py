@@ -15,7 +15,12 @@ maps share the same key set, the regex dedups via a set) and fails if:
     src/main has no `object X` with a `main` (a deleted tool still named);
   * README.md's Layout block lists a `X.scala` file (an entry under
     `src/main/scala/graft/`, e.g. `Verify.scala` or `schema/Schemas.scala`)
-    that does not exist.
+    that does not exist;
+  * COVERAGE.md names a backticked `[pkg/]Object.member` (optionally with
+    an argument list) that no src/main or src/test file defines: a file
+    that defines `Object` (under a `pkg` directory when one is given) must
+    also define `member`. Case-class fields (`Rec.chunkSpans`) and file
+    names (`CleanExprs.scala`) are not code references.
 
 Run from the repo root as the LAST step before the end-of-round docs
 commit:  python3 tools/check_docs.py [--tests 302]
@@ -33,9 +38,22 @@ def main() -> int:
 
     names = set()
     mains = set()
-    for f in glob.glob("src/main/scala/graft/**/*.scala", recursive=True):
+    # type name -> [(dir, names the file defines)], over main AND test code
+    owners = {}
+    case_classes = set()
+    for f in (glob.glob("src/main/scala/**/*.scala", recursive=True)
+              + glob.glob("src/test/scala/**/*.scala", recursive=True)):
         with open(f, encoding="utf-8") as fh:
             src = fh.read()
+        defined = set(re.findall(
+            r"\b(?:def|val|var|object|class|trait|type)\s+(\w+)", src))
+        for kind, t in re.findall(r"\b(case\s+class|object|class|trait)\s+([A-Z]\w*)",
+                                  src):
+            if kind.startswith("case"):
+                case_classes.add(t)
+            owners.setdefault(t, []).append((os.path.dirname(f), defined))
+        if not f.startswith("src/main/scala/graft/"):
+            continue
         names |= set(re.findall(r'"(q\d+_[a-z0-9_]+)"\s*->', src))
         pkg = re.search(r"^package\s+([\w.]+)", src, re.M)
         # each top-level object runs to the next one; it is a main when its
@@ -102,6 +120,17 @@ def main() -> int:
         num = q.split("_", 1)[0]
         if not re.search(rf"\b{num}\b", docs["COVERAGE.md"]):
             errs.append(f"COVERAGE.md: no row mentions {num} ({q})")
+
+    for m in sorted(set(re.findall(
+            r"`((?:[a-z]\w*/)*)([A-Z]\w*)\.([a-z_]\w*)(?:\([^`]*\))?`",
+            docs["COVERAGE.md"]))):
+        pkg, obj, member = m
+        if member == "scala" or obj in case_classes:
+            continue
+        if not any(member in defined and d.endswith(pkg.rstrip("/"))
+                   for d, defined in owners.get(obj, [])):
+            errs.append(f"COVERAGE.md: names `{pkg}{obj}.{member}` but no "
+                        f"src/main or src/test file defines it")
 
     if errs:
         print(f"source query inventory: {n}")
